@@ -25,6 +25,10 @@ private[expressions] object Md5Util {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** The thread's reusable digest, in its reset state: every user ends
+    * with `digest(out, 0, 16)`, which resets it for the next call. */
+  def md5(): java.security.MessageDigest = tl.get()
+
   /** md5(prefix ++ payload) into `out` (16 bytes). */
   def digestInto(prefix: Array[Byte], payload: Array[Byte],
       out: Array[Byte]): Unit = {

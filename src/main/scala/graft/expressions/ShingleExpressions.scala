@@ -145,7 +145,7 @@ object ShingleHashes {
       bytes(i) = if (t == null) Array.empty[Byte] else t.getBytes
       i += 1
     }
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = Md5Util.md5()
     val tmp = new Array[Byte](16)
     val out = new Array[Any](n - len + 1)
     i = 0

@@ -53,10 +53,6 @@ object TextFunctions {
   def minHash(shingleSet: Column, seed: Int): Column =
     array_min(transform(shingleSet, s => md5(concat(lit(s"$seed:"), s))))
 
-  /** Full MinHash signature: `numHashes` independent min-hashes. */
-  def minHashSignature(shingleSet: Column, numHashes: Int = 16): Column =
-    array((0 until numHashes).map(minHash(shingleSet, _)): _*)
-
   /** LSH band digests: the 16-hash signature split into `bands` contiguous
     * bands, each band hashed to one digest. Two documents are candidates iff
     * they agree on at least one full band — the standard S-curve: with

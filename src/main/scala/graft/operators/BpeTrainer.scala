@@ -137,7 +137,7 @@ ORDER BY round"""
   /** The distributed merge loop, engine-selectable for spec equivalence
     * and the huge-vocab fallback: per round, one vocab-sized pair-count
     * job + a 1-row best-pair collect, lineage kept linear with
-    * `localCheckpoint` (the connectedComponents loop discipline).
+    * [[Fence]] (the connectedComponents loop discipline).
     */
   private[graft] def bpeMergesDistributedFrom(spark: SparkSession,
       corpus: DataFrame, nMerges: Int = 10): DataFrame =
@@ -155,7 +155,7 @@ ORDER BY round"""
     // initial symbol sequences: one character per symbol
     var syms = vocab
       .select(col("freq"), split(col("word"), "").as("syms"))
-      .localCheckpoint()
+      .transform(Fence)
 
     val learned = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
@@ -187,7 +187,7 @@ ORDER BY round"""
           // sequential array fold — per word, vocab-sized stage
           syms = syms
             .select(col("freq"), mergePair(col("syms"), a, b).as("syms"))
-            .localCheckpoint()
+            .transform(Fence)
           round += 1
       }
     }

@@ -33,9 +33,7 @@ object ColumnDigest {
     // fence the result frame ONCE: each per-column branch references it,
     // and without the checkpoint every branch re-plans (and re-executes)
     // the full upstream chain — N× the source query's exchanges
-    val reliable =
-      df0.sparkSession.sparkContext.getCheckpointDir.isDefined
-    val df = if (reliable) df0.checkpoint() else df0.localCheckpoint()
+    val df = Fence(df0)
     val perCol = cols.map { name =>
       val rendered = renders.getOrElse(name, col(name).cast("string"))
       df.select(col(orderCol).as("k"), rendered.as("v"))

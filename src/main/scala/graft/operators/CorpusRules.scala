@@ -138,10 +138,7 @@ FROM gq ORDER BY doc_id"""
   def dataEpochs(spark: SparkSession, sfDir: String,
       budget: Long = 40000L): DataFrame = {
     val d = Tables.documents(spark, sfDir)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val avail = fence(d
+    val avail = Fence(d
       .select(col("source"),
         size(filter(tokens(col("text")), t => length(t) > 0))
           .cast(LongType).as("n_tok"))
@@ -207,10 +204,7 @@ FROM eg ORDER BY source"""
   def budgetWaterfill(spark: SparkSession, sfDir: String,
       budget: Long = 30000L): DataFrame = {
     val d = Tables.documents(spark, sfDir)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val avail = fence(d
+    val avail = Fence(d
       .select(col("source"),
         size(filter(tokens(col("text")), t => length(t) > 0))
           .cast(LongType).as("n_tok"))
@@ -394,11 +388,7 @@ ORDER BY sp.source, sp.source_b"""
     // round 16 (§2): sig is self-joined (sig × bSide) — unfenced, the
     // broadcast side re-planned the whole gram + 16-min corpus pass;
     // the fence is #sources × 16 hex strings
-    val reliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val sig = fence(grams.groupBy("source").agg(minCols.head,
+    val sig = Fence(grams.groupBy("source").agg(minCols.head,
       minCols.tail: _*))
     val bSide = sig.columns.foldLeft(sig)((df, c) =>
       df.withColumnRenamed(c, c + "_b"))
@@ -484,13 +474,9 @@ ORDER BY spr.source, spr.source_b"""
     evalAllocFrom(Tables.documents(spark, sfDir), evalN)
 
   def evalAllocFrom(corpus: DataFrame, evalN: Long): DataFrame = {
-    val reliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // the ONE corpus pass; the cells frame is fenced so the normalizer
     // and rank branches below never re-scan the corpus
-    val cells = fence(corpus.groupBy(col("lang"), col("source"))
+    val cells = Fence(corpus.groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).cast(LongType).as("n_cell")))
     val totals = cells.agg(sum(col("n_cell")).cast(LongType).as("n_total"),
       count(lit(1)).cast(LongType).as("n_cells"))

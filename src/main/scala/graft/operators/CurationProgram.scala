@@ -44,12 +44,8 @@ object CurationProgram {
 
   private def run(corpus: DataFrame, minQuality: Double, k: Int,
       budget: Long): Stages = {
-    val reliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // the ONE text scan: token count, quality, digest — then text drops
-    val base = fence(corpus.select(
+    val base = Fence(corpus.select(
       col("doc_id"), col("source"), col("lang"),
       size(tokens(col("text"))).cast("long").as("n_tokens"),
       round(TextPipeline.qualityCol, 4).as("quality"),
@@ -59,8 +55,8 @@ object CurationProgram {
     val winners = gated.groupBy("text_hash")
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    val deduped = fence(gated.join(winners, Seq("doc_id")))
-    val capped = fence(TextPipeline.domainCapFrom(
+    val deduped = Fence(gated.join(winners, Seq("doc_id")))
+    val capped = Fence(TextPipeline.domainCapFrom(
         deduped.select(col("doc_id"), col("source")), k)
       .select(col("doc_id"), col("rk").as("cap_rk"))
       .join(deduped, Seq("doc_id")))

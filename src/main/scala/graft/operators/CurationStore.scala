@@ -75,14 +75,11 @@ object CurationStore {
   def buildCurationManifest(spark: SparkSession, corpus: DataFrame,
       path: String, minQuality: Double = DefaultMinQuality,
       k: Int = DefaultK, budget: Long = DefaultBudget): Unit = {
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val base = fence(withQ4(baseScan(corpus)))
+    val base = Fence(withQ4(baseScan(corpus)))
     val gated = base.filter(col("quality") >= minQuality)
     val winners = gated.groupBy("text_hash")
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val deduped = fence(gated.join(winners, Seq("doc_id")))
+    val deduped = Fence(gated.join(winners, Seq("doc_id")))
     val capped = TextPipeline.domainCapFrom(
         deduped.select(col("doc_id"), col("source")), k)
       .select(col("doc_id"), col("rk").as("cap_rk"))
@@ -124,7 +121,7 @@ object CurationStore {
       if (ingestTag.nonEmpty) ingestTag
       else s"d${all.select(col("ingest")).distinct().count()}"
     val stored = all.filter(col("ingest") =!= tag)
-    val base = withQ4(baseScan(delta)).localCheckpoint()
+    val base = withQ4(baseScan(delta)).transform(Fence)
     val gated = base.filter(col("quality") >= minQuality)
     // a delta doc loses dedup iff ANY stored GATED doc carries its hash
     // (stored ids are smaller by the append contract), else the MIN
@@ -168,7 +165,7 @@ object CurationStore {
         col("cap_rk"))
       // materialize BEFORE the write so the plan holds no open scan of
       // the tree it writes into
-      .localCheckpoint()
+      .transform(Fence)
     docs.repartition(col("doc_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/docs/ingest=$tag")
     writeManifest(spark, path, budget)
@@ -219,7 +216,7 @@ object CurationStore {
   def compactCurationStore(spark: SparkSession, path: String): Unit = {
     val all = spark.read.parquet(s"$path/docs")
       .drop("ingest") // partition column; everything re-lands in base
-      .localCheckpoint() // materialize before rewriting the tree read from
+      .transform(Fence) // materialize before rewriting the tree read from
     // stage under a dot-prefixed dir (hidden from partition discovery),
     // then swap with two renames — no reader ever lists a PARTIAL tree
     // (the StoreVersioning publish discipline; the manifest, the store's
@@ -404,10 +401,10 @@ object CurationStore {
   def forgetDocs(spark: SparkSession, ids: DataFrame, path: String,
       k: Int = DefaultK, budget: Long = DefaultBudget): Unit = {
     val all = spark.read.parquet(s"$path/docs")
-    val drop = ids.select(col("doc_id")).localCheckpoint()
-    val deleted = all.join(drop, Seq("doc_id")).localCheckpoint()
+    val drop = ids.select(col("doc_id")).transform(Fence)
+    val deleted = all.join(drop, Seq("doc_id")).transform(Fence)
     val surviving = all.join(drop, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     // dedup succession, confined to hashes a deletion touched
     val affHashes = deleted.select("text_hash").distinct()
     val inAffHash = surviving.join(broadcast(affHashes), Seq("text_hash"))
@@ -422,7 +419,7 @@ object CurationStore {
     val affSources = deleted.select("source")
       .unionByName(dedupFixed.filter(col("in_d2") =!= col("in_d"))
         .select("source"))
-      .distinct().withColumn("aff", lit(true)).localCheckpoint()
+      .distinct().withColumn("aff", lit(true)).transform(Fence)
     val updated = surviving
       .join(dedupFixed.select(col("doc_id"), col("in_d2")),
         Seq("doc_id"), "left")
@@ -454,7 +451,7 @@ object CurationStore {
       .distinct().collect().map(_.getString(0)) // bounded: #ingest dirs
     val rewrite = fixed
       .filter(col("ingest").isInCollection(affParts.toSeq))
-      .drop("chg").localCheckpoint()
+      .drop("chg").transform(Fence)
     affParts.foreach { p =>
       rewrite.filter(col("ingest") === p).drop("ingest")
         .repartition(col("doc_id"))

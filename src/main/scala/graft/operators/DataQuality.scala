@@ -349,7 +349,7 @@ object DataQuality {
       .agg(sum(col("sx")).as("sx"), sum(col("sw")).as("sw"),
         sum(col("n_docs")).cast(LongType).as("n_docs"),
         sum(col("tx")).cast(LongType).as("tx"))
-      .localCheckpoint() // <= B rows; referenced by means AND totals
+      .transform(Fence) // <= B rows; referenced by means AND totals
     val means = merged
       // a resample with total weight 0 has no mean: drop it BEFORE the
       // rank window in both engines (P = e^-n per resample — unreachable
@@ -392,7 +392,7 @@ object DataQuality {
     // the totals agg would each re-plan (and re-run) the classifier
     // chain otherwise
     val base = clf.join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .localCheckpoint()
+      .transform(Fence)
     val totals = base.groupBy("lang").agg(count(lit(1)).as("n_total"))
     val ranked = TextPipeline.rankPerKey(base, "lang",
       floor(col("score_q6") / 65536.0d),
@@ -459,7 +459,7 @@ object DataQuality {
         sum((col("q_clf") * col("q_heur")).cast(dec)).as("s_q_clf_q_heur"),
         sum((col("q_clf") * col("n_tok")).cast(dec)).as("s_q_clf_n_tok"),
         sum((col("q_heur") * col("n_tok")).cast(dec)).as("s_q_heur_n_tok"))): _*)
-      .localCheckpoint()
+      .transform(Fence)
     def pairCorr(x: String, y: String): DataFrame = {
       val (sx, sy, sxy) = (col(s"s_$x"), col(s"s_$y"), col(s"s_${x}_$y"))
       val (sxx, syy) = (col(s"s_${x}_$x"), col(s"s_${y}_$y"))
@@ -518,7 +518,7 @@ object DataQuality {
       .agg(count(lit(1)).cast(LongType).as("n"),
         sum(col("label")).cast(LongType).as("g_pos"))
       .withColumn("_rb", floor(col("score_q6") / 65536.0d))
-      .localCheckpoint()
+      .transform(Fence)
     val bucketTotals = groups.groupBy(col("lang"), col("_rb"))
       .agg(sum(col("n")).as("_bn"))
       .withColumn("_boff",
@@ -576,7 +576,7 @@ object DataQuality {
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .withColumn("shard",
         floor(-abs(col("score_q6")) / 65536.0d).cast(LongType))
-      .localCheckpoint()
+      .transform(Fence)
     TextPipeline.firstKPerKey(dis, "lang",
         Seq(abs(col("score_q6")).desc, col("doc_id")), Left(k.toLong))
       .select(col("lang"), col("rk").as("rnk"), col("doc_id"),
@@ -668,7 +668,7 @@ object DataQuality {
     val t = d.select(col("doc_id"), col("lang"),
         explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
-      .localCheckpoint()
+      .transform(Fence)
     val gf = t.groupBy("token")
       .agg(count(lit(1)).cast(LongType).as("gfreq"))
     val total = gf.agg(sum(col("gfreq")).cast(LongType).as("n_total"))
@@ -685,7 +685,7 @@ object DataQuality {
     // below (offsets + main per signal) re-plans its input, so an
     // unfenced classifier/LM chain would double per rank (166
     // exchanges measured) — behind the leaf each branch is a cheap scan
-    val sig = nll.join(heur, "doc_id").join(clf, "doc_id").localCheckpoint()
+    val sig = nll.join(heur, "doc_id").join(clf, "doc_id").transform(Fence)
     // the three FULL per-lang rankings via the two-level exact rank
     // (TextPipeline.rankPerKey), each computed INDEPENDENTLY from the
     // fenced leaf and joined back on doc_id — chaining them would
@@ -708,7 +708,7 @@ object DataQuality {
       .withColumn("rrf_micro",
         expr("(1000000 div (60 + r_heur)) + (1000000 div (60 + r_clf))" +
           " + (1000000 div (60 + r_nll))"))
-      .localCheckpoint() // firstKPerKey's offsets branch re-plans too
+      .transform(Fence) // firstKPerKey's offsets branch re-plans too
     // final fused top-k via the shard-pruned firstKPerKey: buckets
     // wholly past k never shuffle
     TextPipeline.firstKPerKey(

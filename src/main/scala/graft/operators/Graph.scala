@@ -26,7 +26,7 @@ import graft.sources.Tables
   *  - The only driver value is the node count (one count job, like CC's
   *    fixpoint row); lineage stays 5 joins deep — under Spark's plan
   *    limits without checkpointing (a 50-iteration variant would
-  *    `localCheckpoint` every ~10 rounds, the CC discipline).
+  *    [[Fence]] its frame every ~10 rounds, the CC discipline).
   */
 object Graph {
 
@@ -136,10 +136,9 @@ object Graph {
   }
 
   /** Build the checkpointed graph leaves — every iteration of every graph
-    * query re-reads them, and a checkpoint (reliable when a dir is
-    * configured, the connectedComponents discipline) both truncates the
-    * unrolled lineage and avoids CacheManager entries leaking into other
-    * queries' plans.
+    * query re-reads them, and a [[Fence]] both truncates the unrolled
+    * lineage and avoids CacheManager entries leaking into other queries'
+    * plans.
     */
   private def buildEdgeArtifacts(spark: SparkSession,
       sfDir: String): EdgeArtifacts = {
@@ -158,9 +157,6 @@ object Graph {
       .distinct()
       .select(concat(lit("c"), col("o_custkey")).as("cnode"),
         concat(lit("s"), col("l_suppkey")).as("snode"))
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def checkpoint(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // edges are checkpointed PRE-PARTITIONED by src and SORTED within
     // partitions: the checkpoint leaf (LogicalRDD) records the
     // HashPartitioning + ordering, so all `Iters` rounds' contribution
@@ -181,13 +177,13 @@ object Graph {
     try {
       // the symmetric union references `pairs` twice; fencing it first
       // runs the orders⨝lineitem distinct once, not once per branch
-      val pairsC = checkpoint(pairs)
-      val edges = checkpoint(
+      val pairsC = Fence(pairs)
+      val edges = Fence(
         pairsC.select(col("cnode").as("src"), col("snode").as("dst"))
           .union(pairsC.select(col("snode").as("src"), col("cnode").as("dst")))
           .repartition(col("src"))
           .sortWithinPartitions("src"))
-      val deg = checkpoint(
+      val deg = Fence(
         edges.groupBy(col("src").as("node"))
           .agg(count(lit(1)).cast(LongType).as("outdeg")))
       // the DIRECTED c→s pair leaves for HITS: the hub-side join probes
@@ -195,9 +191,9 @@ object Graph {
       // same pairsC, captured once each
       val directed = pairsC.select(col("cnode").as("src"),
         col("snode").as("dst"))
-      val pairsBySrc = checkpoint(
+      val pairsBySrc = Fence(
         directed.repartition(col("src")).sortWithinPartitions("src"))
-      val pairsByDst = checkpoint(
+      val pairsByDst = Fence(
         directed.repartition(col("dst")).sortWithinPartitions("dst"))
       EdgeArtifacts(deg, edges, pairsBySrc, pairsByDst)
     } finally spark.conf.set(aqeKey, aqeWas)
@@ -371,9 +367,6 @@ SELECT node, outdeg, r AS pagerank FROM r$Iters ORDER BY node"""
   def hits(spark: SparkSession, sfDir: String): DataFrame = {
     val shared = sharedEdges(spark, sfDir)
     val (edgesBySrc, edgesByDst) = (shared.pairsBySrc, shared.pairsByDst)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def checkpoint(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     val dec = DecimalType(20, 10)
     // score := round(sum / max, 10): the sum is exact DECIMAL (inputs are
     // 10-dp-rounded doubles, exactly representable at scale 10), max of
@@ -387,7 +380,7 @@ SELECT node, outdeg, r AS pagerank FROM r$Iters ORDER BY node"""
     // normalizer agg is a one-job scan and every round's plan is
     // constant-size — the CC/kmv fence discipline applied per iteration.
     def normalize(raw: DataFrame, scoreCol: String): DataFrame = {
-      val fenced = checkpoint(raw)
+      val fenced = Fence(raw)
       val mx = fenced.agg(max(col("s")).as("mx"))
       fenced.crossJoin(broadcast(mx))
         .select(col("node"),

@@ -170,7 +170,7 @@ object MixtureOptimizer {
       // fenced: firstKPerKey's offsets branch re-plans (and would
       // re-run) the whole token pipeline otherwise; the leaf is
       // doc-sized and text-free
-      .localCheckpoint()
+      .transform(Fence)
     // per-lang top-k via the shard-pruned TextPipeline.firstKPerKey:
     // the excess-ratio range bucket is monotone in the DESC admission
     // order, so buckets wholly past k prune before any row shuffles —

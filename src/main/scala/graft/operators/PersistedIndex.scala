@@ -99,7 +99,7 @@ object PersistedIndex {
         col("embedding").cast("array<double>").as("v"))
       .dropDuplicates("vec_id")
       .join(storedIds, Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return // full replay — nothing to fold
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
@@ -391,7 +391,7 @@ object PersistedIndex {
     val fresh = delta.select(col("vec_id"), col("label"), col("embedding"))
       .dropDuplicates("vec_id")
       .join(storedIds, Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
@@ -536,7 +536,7 @@ object PersistedIndex {
     val fresh = delta.select(col("vec_id"), col("label"), col("embedding"))
       .dropDuplicates("vec_id")
       .join(storedIds, Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
@@ -581,7 +581,7 @@ object PersistedIndex {
     val all = spark.read.parquet(s"$path/codes")
       .filter(col("ingest").isInCollection(live))
       .select(col("vec_id"), col("label"), col("codes"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     val token =
       s"c${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     graft.sources.CorpusWriter.writePartitioned(
@@ -793,7 +793,7 @@ object PersistedIndex {
       .withColumn("crn", row_number().over(wProbe))
       .filter(col("crn") <= nprobe)
       .select(col("q_id"), col("label"))
-      .localCheckpoint()
+      .transform(Fence)
     val codes = spark.read.parquet(s"$path/codes")
       .filter(col("ingest").isInCollection(live))
     val recon = concat((0 until SimilarityPipeline.PqM).map { m =>
@@ -956,7 +956,7 @@ object PersistedIndex {
     val fresh = delta.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id")
       .join(storedIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
@@ -1486,7 +1486,7 @@ FROM graft_shingle_bloom_build""")
         transform(col("p"), x => x.getField("tf")).as("tfs"))
       .withColumn("bucket", termBucket(col("term")))
       // materialize before (possibly) rewriting inside the tree read from
-      .localCheckpoint()
+      .transform(Fence)
     merged.write.partitionBy("bucket")
       .mode(SaveMode.Overwrite).parquet(s"$dst/postings/ingest=$token")
     // doclens drop tombstoned docs; meta is RECOMPUTED from the live
@@ -1497,7 +1497,7 @@ FROM graft_shingle_bloom_build""")
       segScan(spark, src, "doclens", segs)
         .select(col("doc_id"), col("dl"), col("shard")),
       tombs)
-      .localCheckpoint()
+      .transform(Fence)
     liveDl.agg(count(lit(1)).cast("long").as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dst/meta/ingest=$token")
@@ -1733,7 +1733,7 @@ FROM graft_shingle_bloom_build""")
       col("embedding").cast("array<double>").as("v"))
     val (cents, assigned) = SimilarityPipeline.kmeansModelFrom(e, k, iters)
     val nodes = assigned.select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     graft.sources.CorpusWriter.writePartitioned(nodes,
       s"$path/nodes/seg=base", Seq("cluster"), "vec_id")
     val edges = nodes.as("n")
@@ -1819,10 +1819,10 @@ FROM graft_shingle_bloom_build""")
       .withColumn("cluster", col("cluster").cast("long"))
       .join(broadcast(touchedAll), Seq("cluster")) // DPP prunes the rest
       .select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     val fresh = assigned.join(
         storedAssigned.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return // full replay — nothing to fold
     // rebuild ONLY clusters that gained a FRESH node: a partially
     // replayed batch lists its already-stored ids' clusters in
@@ -1831,7 +1831,7 @@ FROM graft_shingle_bloom_build""")
     val touched = fresh.select("cluster").distinct()
     val storedTouched = storedAssigned
       .join(broadcast(touched), Seq("cluster"))
-    val members = storedTouched.unionByName(fresh).localCheckpoint()
+    val members = storedTouched.unionByName(fresh).transform(Fence)
     val newEdges = members.as("n")
       .join(SimilarityPipeline.knnEdgesFrom(members).as("g"), Seq("vec_id"))
       .select(col("vec_id"), col("rank"), col("nbr_id"), col("sim"),
@@ -2010,7 +2010,7 @@ FROM graft_shingle_bloom_build""")
       .select(col("vec_id"), col("label"), col("embedding"))
       .dropDuplicates("vec_id") // one node row per vector, batch-internal too
       .join(storedIds, Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return // full replay — nothing to fold
     val token = s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     writeLshSegment(spark, fresh, path, token)
@@ -2044,7 +2044,7 @@ FROM graft_shingle_bloom_build""")
     val all = spark.read.parquet(s"$path/vectors")
       .filter(col("ingest").isInCollection(live))
       .select(col("vec_id"), col("label"), col("embedding"))
-      .localCheckpoint()
+      .transform(Fence)
     val token = s"c${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     writeLshSegment(spark, all, path, token)
     commitLshManifest(spark, path, Seq(token))

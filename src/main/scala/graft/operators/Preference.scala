@@ -443,7 +443,7 @@ ORDER BY n.source"""
         coalesce(col("w_ji"), lit(0L)).as("w_ji"))
       .withColumn("dir", when(col("w_ij") > col("w_ji"), 1)
         .when(col("w_ij") < col("w_ji"), -1).otherwise(0))
-      .localCheckpoint()
+      .transform(Fence)
     val tri = ap.select(col("i"), col("j"), col("dir").as("d_ij"))
       .join(ap.select(col("i").as("j"), col("j").as("k"),
         col("dir").as("d_jk")), "j")

@@ -59,10 +59,6 @@ object RankerEval {
   private[operators] val Rankers =
     Seq("bm25_index", "hybrid", "store", "tfidf")
 
-  private def fence(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint()
 
   // ---------------------------------------- the independent grade (B) --
 
@@ -86,7 +82,7 @@ object RankerEval {
   private def docVecs(corpus: DataFrame, bucketStart: Int,
       signPos: Int): (DataFrame, DataFrame) = {
     graft.expressions.VectorExpressions.register(corpus.sparkSession)
-    val vecs = fence(corpus
+    val vecs = Fence(corpus
       .select(col("doc_id"), graft.expressions.VectorExpressions
         .hashEmbed64NativeAt(tokens(col("text")), bucketStart, signPos)
         .as("dense"))
@@ -130,7 +126,7 @@ object RankerEval {
       .agg(sum(col("v") * col("qv")).cast(LongType).as("d"))
     val dd400 = col("d") * col("d") * lit(400L)
     val nn = col("n2") * col("n2q")
-    fence(dots.join(dN, "doc_id").join(broadcast(qN), "query_id")
+    Fence(dots.join(dN, "doc_id").join(broadcast(qN), "query_id")
       .withColumn("grade",
         when(col("d") > 0L && dd400 >= lit(81L) * nn, 3L)
           .when(col("d") > 0L && dd400 >= lit(49L) * nn, 2L)
@@ -149,7 +145,7 @@ object RankerEval {
       corpus: DataFrame, panel: Seq[(Long, Seq[String])], kEach: Int,
       k: Int): DataFrame =
     hybridRankingFromText(spark, corpus, panel,
-      fence(Retrieval.indexTopKBatchFrom(spark, corpus, panel, kEach)
+      Fence(Retrieval.indexTopKBatchFrom(spark, corpus, panel, kEach)
         .select(col("query_id"), col("rank"), col("doc_id"))), kEach, k)
 
   /** [[hybridRanking]] over an ALREADY-FENCED text top-kEach frame of
@@ -177,7 +173,7 @@ object RankerEval {
       .join(dots, Seq("query_id", "doc_id"), "left")
       .select(col("query_id"), col("doc_id"), cosV.as("cosv"))
     val byCos = Seq(col("cosv").desc, col("doc_id"))
-    val vecTop = fence(scored
+    val vecTop = Fence(scored
       .withColumn("srk", row_number().over(Window
         .partitionBy(col("query_id"), pmod(col("doc_id"), lit(8)))
         .orderBy(byCos: _*)))
@@ -223,7 +219,7 @@ object RankerEval {
     // a direct top-EvalK run, see hybridRankingFromText) AND the
     // hybrid's text side; previously each built its own term-filtered
     // corpus scoring subtree.
-    val textTop20 = fence(Retrieval.indexTopKBatchFrom(spark, corpus,
+    val textTop20 = Fence(Retrieval.indexTopKBatchFrom(spark, corpus,
         QueryPanel, RetrievalProgram.KEach)
       .select(col("query_id"), col("rank"), col("doc_id")))
     val tfidf = textTop20.filter(col("rank") <= EvalK)
@@ -268,7 +264,7 @@ object RankerEval {
     // TWO consumers (the grading join and the ranker grid) — unfenced,
     // the grid's distinct would re-plan every ranker's whole subtree
     // (measured: 22 → 41 exchanges)
-    val rks = fence(rankings)
+    val rks = Fence(rankings)
     val graded = rks.join(qrels, Seq("query_id", "doc_id"), "left")
       .withColumn("grade", coalesce(col("grade"), lit(0L)))
     val retrieved = graded.groupBy("ranker", "query_id")

@@ -608,7 +608,7 @@ FROM cm"""
     // three branches (ranking, relevance counts, ideal) re-read it
     val scored = panelScoredFrom(spark, corpus, queries)
       .withColumnRenamed("n_terms_hit", "grade")
-      .localCheckpoint()
+      .transform(Fence)
     val byScore = Seq(col("score").desc, col("doc_id"))
     val byGrade = Seq(col("grade").desc, col("doc_id"))
     def topK(order: Seq[org.apache.spark.sql.Column]): DataFrame = {

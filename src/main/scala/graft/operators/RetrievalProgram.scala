@@ -67,10 +67,6 @@ object RetrievalProgram {
     * far below this at the generator's document lengths). */
   private[operators] val IdBase = 1024L
 
-  private def fence(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint()
 
   /** THE floor-quantized RRF fuse recipe — reciprocal ranks at k=60
     * summed, floor-quantized to 10⁻⁶ (the pairAlignment half-point
@@ -113,7 +109,7 @@ object RetrievalProgram {
     val nc = when(size(toks) <= Win, lit(1L))
       .otherwise(floor((size(toks) - lit(Win - Stride + 1))
         .cast("double") / lit(Stride.toDouble)).cast(LongType) + 1L)
-    fence(corpus
+    Fence(corpus
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("toks"), nc.as("nc"))
       .select(col("doc_id"), col("toks"),
@@ -151,12 +147,12 @@ object RetrievalProgram {
     val dense = chunks.select(col("chunk_id"),
       graft.expressions.VectorExpressions
         .hashEmbed64Native(col("ctoks")).as("dense"))
-    val sparse = fence(dense
+    val sparse = Fence(dense
       .select(col("chunk_id"), posexplode(col("dense")).as(Seq("pos", "v")))
       .filter(col("v") =!= 0L)
       .select(col("chunk_id"), col("pos").cast(LongType).as("pos"),
         col("v")))
-    val norms = fence(sparse.groupBy("chunk_id")
+    val norms = Fence(sparse.groupBy("chunk_id")
       .agg(sum(col("v") * col("v")).cast(LongType).as("n2")))
     (sparse, norms)
   }
@@ -224,7 +220,7 @@ object RetrievalProgram {
     */
   private[operators] def textRankQ9Batch(tf: DataFrame, qterms: DataFrame,
       dfTerm: DataFrame, stats: DataFrame, kEach: Int): DataFrame =
-    fence(tf.join(broadcast(qterms), "term")
+    Fence(tf.join(broadcast(qterms), "term")
       .join(broadcast(dfTerm), "term")
       .crossJoin(broadcast(stats))
       .withColumn("wq9",
@@ -246,7 +242,7 @@ object RetrievalProgram {
     * two-phase window discipline. */
   private[operators] def vecRankBatch(scored: DataFrame,
       kEach: Int): DataFrame =
-    fence(scored
+    Fence(scored
       .withColumn("srk", row_number().over(Window
         .partitionBy(col("query_id"), pmod(col("chunk_id"), lit(NShardsC)))
         .orderBy(col("cosv").desc, col("chunk_id"))))
@@ -261,7 +257,7 @@ object RetrievalProgram {
     * post-fuse window partitions by query over ≤ 2·kEach rows). */
   private[operators] def fuseBatch(textTop: DataFrame, vecTop: DataFrame,
       topK: Int): DataFrame = {
-    fence(textTop.join(vecTop, Seq("query_id", "chunk_id"), "full_outer")
+    Fence(textTop.join(vecTop, Seq("query_id", "chunk_id"), "full_outer")
       .select(col("query_id"), col("chunk_id"), col("text_rank"),
         col("vec_rank"),
         rrfScore(col("text_rank"), col("vec_rank")).as("rrf_score"))
@@ -328,7 +324,7 @@ object RetrievalProgram {
       .agg(sum(col("v") * col("sv")).cast(LongType).as("d"))
     val cosAsg = (coalesce(col("d"), lit(0L)).cast("double")
       / (sqrt(col("n2").cast("double")) * sqrt(col("n2s").cast("double"))))
-    fence(norms.crossJoin(broadcast(seedNorms))
+    Fence(norms.crossJoin(broadcast(seedNorms))
       .join(dots, Seq("chunk_id", "seed_idx"), "left")
       .withColumn("rn", row_number().over(Window.partitionBy("chunk_id")
         .orderBy(cosAsg.desc, col("seed_idx"))))
@@ -374,7 +370,7 @@ object RetrievalProgram {
     */
   private[operators] def textRankQ9(tf: DataFrame, dfTerm: DataFrame,
       stats: DataFrame): DataFrame =
-    fence(tf.join(broadcast(dfTerm), "term")
+    Fence(tf.join(broadcast(dfTerm), "term")
       .crossJoin(broadcast(stats))
       .withColumn("wq9",
         floor(Retrieval.bm25Weight * lit(1000000000d) + lit(0.5d))
@@ -391,7 +387,7 @@ object RetrievalProgram {
   /** Stage 4 vector side: rank a (chunk_id, cosv) frame to the fenced
     * top-[[KEach]] (chunk_id, vec_rank). */
   private[operators] def vecRank(scored: DataFrame): DataFrame =
-    fence(scored
+    Fence(scored
       .orderBy(col("cosv").desc, col("chunk_id"))
       .limit(KEach)
       // post-limit window: <= KEach rows
@@ -405,7 +401,7 @@ object RetrievalProgram {
     * from DuckDB by 1 ulp — the pairAlignment class). */
   private[operators] def fuse(textTop: DataFrame,
       vecTop: DataFrame): DataFrame = {
-    fence(textTop.join(vecTop, Seq("chunk_id"), "full_outer")
+    Fence(textTop.join(vecTop, Seq("chunk_id"), "full_outer")
       .select(col("chunk_id"), col("text_rank"), col("vec_rank"),
         rrfScore(col("text_rank"), col("vec_rank")).as("rrf_score"))
       .orderBy(col("rrf_score").desc, col("chunk_id"))

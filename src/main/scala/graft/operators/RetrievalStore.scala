@@ -138,7 +138,7 @@ object RetrievalStore {
       .distinct()
     val batch = docBatch.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id")
-      .localCheckpoint()
+      .transform(Fence)
     val replayed = batch.join(storedDocs, Seq("doc_id"), "left_semi")
     val divergent = RetrievalProgram.chunkStage(replayed)
       .select(col("chunk_id"), chunkChecksum(col("ctoks")).as("csum"))
@@ -158,7 +158,7 @@ object RetrievalStore {
         "append-only by id (a replay must carry identical text); update " +
         "via forgetFromRetrievalStore + append, or rebuild")
     val fresh = batch.join(storedDocs, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Fence)
     if (fresh.isEmpty) return // full replay — nothing to fold
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
@@ -194,7 +194,7 @@ object RetrievalStore {
   def forgetFromRetrievalStore(spark: SparkSession, ids: DataFrame,
       path: String): Unit = {
     val drop = ids.select(col("doc_id")).dropDuplicates("doc_id")
-      .localCheckpoint()
+      .transform(Fence)
     val seedHit = spark.read.parquet(s"$path/seedmeta")
       .select(floor(col("chunk_id") / IdBase).cast(LongType).as("doc_id"))
       .join(drop, Seq("doc_id"), "left_semi")
@@ -252,7 +252,7 @@ object RetrievalStore {
       spark.read.parquet(s"$path/$sub")
         .filter(col("ingest").isInCollection(live))
         .drop("ingest")
-        .localCheckpoint() // materialize BEFORE writing into the same tree
+        .transform(Fence) // materialize BEFORE writing into the same tree
     graft.sources.CorpusWriter.writePartitioned(liveRows("vectors"),
       s"$path/vectors/ingest=$token", Seq("cluster"), "chunk_id")
     graft.sources.CorpusWriter.writePartitioned(liveRows("norms"),

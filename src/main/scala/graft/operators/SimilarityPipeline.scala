@@ -131,7 +131,7 @@ object SimilarityPipeline {
         cosine(col("embedding"), col("q")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(MmrPool)
-      .localCheckpoint()
+      .transform(Fence)
     val pairSims = cand
       .select(col("vec_id").as("a"), col("embedding").as("ea"))
       .crossJoin(cand.select(col("vec_id").as("b"), col("embedding").as("eb")))
@@ -546,7 +546,7 @@ FROM ($picks) ORDER BY rank"""
           when(graft.expressions.VectorExpressions.dotNative(
             col("embedding").cast("array<double>"), h) > 0d, 1)
             .otherwise(0)).as("bits"))
-      .localCheckpoint() // one sign pass shared by all grid configs
+      .transform(Fence) // one sign pass shared by all grid configs
     val exactTop = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(queryVec(e)))
       .select(col("vec_id"), cosine(col("embedding"), col("q")).as("cos"))
@@ -676,7 +676,7 @@ FROM ($picks) ORDER BY rank"""
     // discipline — in the recurring shape this is PersistedIndex's
     // cluster-partitioned layout instead)
     val a = assigned.select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     val dups = a.as("x").join(a.as("y"),
         col("x.cluster") === col("y.cluster") &&
           col("x.vec_id") > col("y.vec_id"))
@@ -712,7 +712,7 @@ FROM ($picks) ORDER BY rank"""
   def knnGraph(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, assigned) = kmeansModel(spark, sfDir, 8, 2)
     val a = assigned.select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     knnEdgesFrom(a).orderBy("vec_id", "rank")
   }
 
@@ -774,14 +774,14 @@ FROM ($picks) ORDER BY rank"""
     // smallest base ids (the stored model a production store would load)
     val (cents, assignedBase) = kmeansModelFrom(base, 8, 2)
     val aBase = assignedBase.select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     // the "stored" graph: base edges under the frozen index
-    val baseGraph = knnEdgesFrom(aBase).localCheckpoint()
+    val baseGraph = knnEdgesFrom(aBase).transform(Fence)
     // fence the delta assignment: it is delta-sized, and fencing keeps
     // Lloyd's 1-row centroid-bundle crossJoin out of the returned plan
     val aDelta = assignToCentroids(delta, cents)
       .select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     val touched = aDelta.select("cluster").distinct() // <= k rows
     val touchedMembers = aBase.join(broadcast(touched), "cluster")
       .select(col("vec_id"), col("cluster"), col("v"))
@@ -810,7 +810,7 @@ FROM ($picks) ORDER BY rank"""
     val (cents, _) = kmeansModelFrom(e.filter(!isDeltaVec), 8, 2)
     val all = assignToCentroids(e, cents)
       .select(col("vec_id"), col("cluster"), col("v"))
-      .localCheckpoint()
+      .transform(Fence)
     knnEdgesFrom(all).orderBy("vec_id", "rank")
   }
 
@@ -1106,11 +1106,8 @@ FROM ($picks) ORDER BY rank"""
     val n = m.getLong(1)
     val mean = m.getSeq[Double](0).map(_ / n)
     val meanCol = array(mean.map(lit): _*)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val centered0 = e.select(col("vec_id"),
-      zip_with(col("v"), meanCol, (x, mu) => x - mu).as("c"))
-    val centered =
-      if (reliable) centered0.checkpoint() else centered0.localCheckpoint()
+    val centered = Fence(e.select(col("vec_id"),
+      zip_with(col("v"), meanCol, (x, mu) => x - mu).as("c")))
 
     var vec: Seq[Double] = Seq.fill(64)(0.125) // deterministic unit start
     var lambda = 0.0
@@ -1157,9 +1154,6 @@ FROM ($picks) ORDER BY rank"""
     */
   def simRecallTune(spark: SparkSession, sfDir: String): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     val e = emb(spark, sfDir)
     val normals = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("h_idx"),
@@ -1169,7 +1163,7 @@ FROM ($picks) ORDER BY rank"""
       .select(transform(col("hs"), x => x.getField("h")).as("normals"))
     // 16 bits per vector, reconstructed from the native 4-band packing:
     // bit(i) = (bandVal[i/4] >> (i%4)) & 1
-    val sig = fence(e.select(col("vec_id"), col("embedding"))
+    val sig = Fence(e.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(normals))
       .select(col("vec_id"), col("embedding"),
         graft.expressions.VectorExpressions.hyperplaneBandsNative(
@@ -1200,7 +1194,7 @@ FROM ($picks) ORDER BY rank"""
         .select(lit(b.toLong).as("n_bands"),
           lit(r.toLong).as("bits_per_band"), col("vec_a"), col("vec_b"))
     }.reduce(_ unionByName _)
-    val cands = fence(tagged)
+    val cands = Fence(tagged)
     val verified = cands.select(col("vec_a"), col("vec_b")).distinct()
       .join(sig.select(col("vec_id").as("vec_a"),
         col("embedding").as("ea")), "vec_a")
@@ -1874,7 +1868,7 @@ FROM t WHERE rank <= $PqTopK ORDER BY q_id, rank"""
     * Scale shape: each prefix ranking is a TakeOrdered top-k against the
     * broadcast 1-row query over a single scan — per-release audit cost,
     * linear in corpus, no shuffle beyond the k-row joins. The exact set
-    * is fenced (localCheckpoint) so four branches share one ranking.
+    * is fenced ([[Fence]]) so four branches share one ranking.
     */
   def mrlRecall(spark: SparkSession, sfDir: String): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
@@ -1888,7 +1882,7 @@ FROM t WHERE rank <= $PqTopK ORDER BY q_id, rank"""
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(MrlK)
       .select(col("vec_id"))
-    val exact = top(64).localCheckpoint()
+    val exact = top(64).transform(Fence)
     MrlDims.map { d =>
       top(d).join(exact, "vec_id")
         .agg(count(lit(1)).as("n_hits"))
@@ -2303,12 +2297,12 @@ FROM g ORDER BY label"""
       // attribution assumption as [[Graph.sharedEdges]]
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val d = knnGraph(spark, sfDir).select(col("vec_id").as("a"),
-        col("nbr_id").as("b")).localCheckpoint()
+        col("nbr_id").as("b")).transform(Fence)
       val built = d.as("f").join(d.as("g"),
           col("f.a") === col("g.b") && col("f.b") === col("g.a"))
         .filter(col("f.a") < col("f.b"))
         .select(col("f.a").as("u"), col("f.b").as("v"))
-        .localCheckpoint()
+        .transform(Fence)
       mutualEdgeRddIds.put(key,
         (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
       mutualEdgeCache.put(key, built)
@@ -2352,7 +2346,7 @@ FROM g ORDER BY label"""
     val deg = mutual.select(col("u").as("node"))
       .union(mutual.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).cast(LongType).as("deg"))
-      .localCheckpoint()
+      .transform(Fence)
     // orient each edge from the lower (deg, id) endpoint; carry the
     // head's (deg, id) so the wedge join can order the two spokes
     // without a second lookup
@@ -2367,7 +2361,7 @@ FROM g ORDER BY label"""
           .otherwise(struct(col("v").as("s"), col("u").as("t"),
             col("du").as("dt"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
-      .localCheckpoint()
+      .transform(Fence)
     // wedges at the minimum corner: two out-edges of s, spokes ordered
     // by (deg, id); the closing edge — if the triangle exists — is
     // oriented exactly t1 -> t2 under the same order
@@ -2377,7 +2371,7 @@ FROM g ORDER BY label"""
             (col("e1.dt") === col("e2.dt") && col("e1.t") < col("e2.t"))))
       .select(col("e1.s").as("x"), col("e1.t").as("y"), col("e2.t").as("z"))
       .join(ori.select(col("s").as("y"), col("t").as("z")), Seq("y", "z"))
-      .localCheckpoint()
+      .transform(Fence)
     val triPerNode = tri.select(col("x").as("node"))
       .union(tri.select(col("y").as("node")))
       .union(tri.select(col("z").as("node")))
@@ -2423,14 +2417,14 @@ FROM g ORDER BY label"""
       col("embedding").cast("array<double>").as("v"))
     val src = Tables.documents(spark, sfDir)
       .select(col("doc_id").as("vec_id"), col("source"))
-    val j = e.join(src, "vec_id").localCheckpoint()
+    val j = e.join(src, "vec_id").transform(Fence)
     val comp = j.select(col("source"),
         posexplode(col("v")).as(Seq("pos", "x")))
       .select(col("source"), col("pos"),
         floor(col("x") * 1000000d + 0.5d).cast(LongType).as("xq"))
     val sp = comp.groupBy("source", "pos")
       .agg(sum(col("xq")).as("ss"), count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Fence)
     val sArr = sp
       .select(col("source"), col("n"),
         struct(col("pos"),
@@ -2536,10 +2530,10 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
         val u = mutual.select(col("u").as("a"), col("v").as("b"))
           .union(mutual.select(col("v").as("a"), col("u").as("b")))
           .repartition(col("b")).sortWithinPartitions("b")
-          .localCheckpoint()
+          .transform(Fence)
         val d = u.groupBy(col("a").as("node"))
           .agg(count(lit(1)).cast(LongType).as("deg"))
-          .localCheckpoint()
+          .transform(Fence)
         (u, d)
       } finally spark0.conf.set(aqeKey, aqeWas)
     // round 0: split the degree frame into survivors and removals.
@@ -2561,7 +2555,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
         .join(dec, Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-        .localCheckpoint()
+        .transform(Fence)
       removed = updated.filter(col("deg") < KCoreK).select("node")
       degAlive = updated.filter(col("deg") >= KCoreK)
     }
@@ -2614,7 +2608,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
     */
   def coresetKcenter(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v")).localCheckpoint()
+      col("embedding").cast("array<double>").as("v")).transform(Fence)
     def dq(c: Seq[Double]) =
       floor(aggregate(
         zip_with(col("v"), array(c.map(lit): _*),
@@ -2623,7 +2617,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
     val v0 = e.filter(col("vec_id") === 0).select("v")
       .head().getSeq[Double](0)
     var cur = e.select(col("vec_id"), col("v"), dq(v0).as("md"))
-      .localCheckpoint()
+      .transform(Fence)
     val picks = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
     picks += ((0L, 0L, cur.agg(max(col("md"))).head().getLong(0)))
     var chosen = Seq(0L)
@@ -2634,7 +2628,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
       val id = p.getLong(0)
       cur = cur.select(col("vec_id"), col("v"),
         least(col("md"), dq(p.getSeq[Double](1))).as("md"))
-        .localCheckpoint()
+        .transform(Fence)
       picks += ((r.toLong, id, cur.agg(max(col("md"))).head().getLong(0)))
       chosen :+= id
     }
@@ -2676,7 +2670,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
       try mutual.select(col("u").as("a"), col("v").as("b"))
         .union(mutual.select(col("v").as("a"), col("u").as("b")))
         .repartition(col("b")).sortWithinPartitions("b")
-        .localCheckpoint()
+        .transform(Fence)
       finally spark.conf.set(aqeKey, aqeWas)
     val deg = und.groupBy(col("a").as("vec_id"))
       .agg(count(lit(1)).cast(LongType).as("deg"))
@@ -2689,7 +2683,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
       .join(deg, Seq("vec_id"), "left")
       .select(col("vec_id"), col("seed_q6"),
         coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint()
+      .transform(Fence)
     var s = base.select(col("vec_id"), col("seed_q6").as("score"))
     for (_ <- 1 to PropagateRounds) {
       val nbr = und.join(s.withColumnRenamed("vec_id", "b"), "b")
@@ -2702,7 +2696,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
               + floor(col("ssum").cast("double") / col("deg")))
               / 2.0d).cast(LongType))
             .otherwise(col("seed_q6")).as("score"))
-        .localCheckpoint()
+        .transform(Fence)
     }
     base.join(s, "vec_id")
       .select(col("vec_id"), col("deg"), col("seed_q6"),
@@ -2742,7 +2736,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
     val langs = Tables.documents(spark, sfDir)
       .select(col("doc_id").as("vec_id"), col("lang"))
     val a = assigned.select(col("vec_id"), col("cluster"), col("v"))
-      .join(langs, "vec_id").localCheckpoint()
+      .join(langs, "vec_id").transform(Fence)
     val x = a.filter(col("lang") === srcLang)
       .select(col("vec_id").as("src_id"), col("cluster"), col("v").as("xv"))
     val y = a.filter(col("lang") === tgtLang)
@@ -2751,7 +2745,7 @@ FROM dr JOIN nr ON dr.source = nr.source ORDER BY dr.source"""
       .select(col("src_id"), col("tgt_id"),
         floor((cosine(col("xv"), col("yv")) + 1.0d) * 1000000d + 0.5d)
           .cast(LongType).as("sq6"))
-      .localCheckpoint()
+      .transform(Fence)
     def nnAvg(side: String): DataFrame = {
       val w = Window.partitionBy(side)
         .orderBy(col("sq6").desc,

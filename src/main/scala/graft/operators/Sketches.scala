@@ -497,13 +497,8 @@ WHERE n_occurrences >= thr ORDER BY token"""
     // of the common self-join) and the distinct token frame twice —
     // without a fence Catalyst re-plans the whole tokenize+window subtree
     // per reference. The sketch is <= #langs x k rows, the token frame
-    // vocabulary-sized; reliable checkpoint when a dir is set, local
-    // otherwise.
-    val reliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val sk = fence(kmvSketchFrom(corpus).select("lang", "h"))
+    // vocabulary-sized.
+    val sk = Fence(kmvSketchFrom(corpus).select("lang", "h"))
     // the pair axis: #langs x #langs (< relation) — the ann_recall_grid
     // class of tiny-frame BNLJ (the only non-equi join here; everything
     // hash- or token-sized below is keyed)
@@ -543,7 +538,7 @@ WHERE n_occurrences >= thr ORDER BY token"""
           / col("theta"), 4).as("kmv_intersect"))
     // exact |A ∩ B| for calibration: distinct (lang, token) equi-joined
     // on token — keyed, no pairwise blowup
-    val dt = fence(langTokens(corpus).select("lang", "token").distinct())
+    val dt = Fence(langTokens(corpus).select("lang", "token").distinct())
     val exact = dt.as("x").join(dt.as("y"),
         col("x.token") === col("y.token") && col("x.lang") < col("y.lang"))
       .groupBy(col("x.lang").as("lang_a"), col("y.lang").as("lang_b"))
@@ -570,11 +565,7 @@ WHERE n_occurrences >= thr ORDER BY token"""
 
   def kmvDifferenceLangsFrom(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val reliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val sk = fence(kmvSketchFrom(corpus).select("lang", "h"))
+    val sk = Fence(kmvSketchFrom(corpus).select("lang", "h"))
     val langs = sk.select("lang").distinct()
     val pairs = langs.as("x").join(langs.as("y"),
         col("x.lang") < col("y.lang"))
@@ -606,7 +597,7 @@ WHERE n_occurrences >= thr ORDER BY token"""
     }
     val na = onlyCount("lang_a", "lang_b", "n_a_only")
     val nb = onlyCount("lang_b", "lang_a", "n_b_only")
-    val dt = fence(langTokens(corpus).select("lang", "token").distinct())
+    val dt = Fence(langTokens(corpus).select("lang", "token").distinct())
     val exd = dt.groupBy("lang").agg(count(lit(1)).as("nd"))
     val exInter = dt.as("x").join(dt.as("y"),
         col("x.token") === col("y.token") && col("x.lang") < col("y.lang"))

@@ -1233,10 +1233,7 @@ object TextPipeline {
     */
   def minhashTune(spark: SparkSession, sfDir: String): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val sig = fence(docs(spark, sfDir)
+    val sig = Fence(docs(spark, sfDir)
       .select(col("doc_id"), graft.expressions.VectorExpressions
         .shingleSetNative(col("text")).as("s"))
       // one-pass 16-seed signature (round 16): the previous
@@ -1296,7 +1293,7 @@ object TextPipeline {
       .distinct()
       .select(col("n_bands").cast(LongType).as("n_bands"),
         rpb.as("rows_per_band"), col("doc_a"), col("doc_b"))
-    val cands = fence(tagged)
+    val cands = Fence(tagged)
     val verified = cands.select(col("doc_a"), col("doc_b")).distinct()
       .join(sig.select(col("doc_id").as("doc_a"), col("s").as("sa")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("s").as("sb")), "doc_b")
@@ -1567,11 +1564,9 @@ FROM agg, tot ORDER BY n_bands DESC"""
       // single-threaded-driver attribution assumption as
       // [[Graph.sharedEdges]]
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val reliable = spark.sparkContext.getCheckpointDir.isDefined
-      val cc = connectedComponents(
+      val built = Fence(connectedComponents(
         dedupMinHash(spark, sfDir).select(col("doc_a"), col("doc_b")),
-        DefaultCcIters)
-      val built = if (reliable) cc.checkpoint() else cc.localCheckpoint()
+        DefaultCcIters))
       clusterLabelRddIds.put(key,
         (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
       clusterLabelCache.put(key, built)
@@ -1648,17 +1643,10 @@ FROM agg, tot ORDER BY n_bands DESC"""
     * embedding near-dup) can be canonicalized.
     */
   def connectedComponents(pairList: DataFrame, maxIters: Int = 20): DataFrame = {
-    // Checkpoint strategy: when the session has a checkpoint dir configured
-    // (`spark.sparkContext.setCheckpointDir`), use RELIABLE checkpoints —
-    // executor-local blocks (`localCheckpoint`) are lost on executor death,
-    // which on a 1000-executor 100 TB run is an expected event, not an edge
-    // case. Without a dir, fall back to localCheckpoint (single-JVM tests,
-    // ad-hoc runs). Either way lineage truncates per round, which is what
-    // keeps the iterated plan linear.
-    val reliable = pairList.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def checkpoint(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val pairs = checkpoint(pairList)
+    // Every round's labels go through [[Fence]] (reliable when a checkpoint
+    // dir is set): lineage truncates per round, which is what keeps the
+    // iterated plan linear.
+    val pairs = Fence(pairList)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     var labels = edges.select(col("src").as("node")).distinct()
@@ -1708,7 +1696,7 @@ FROM agg, tot ORDER BY n_bands DESC"""
         // it, each round plans against a materialized leaf (measured: Verify
         // 378 s -> ~90 s). Label tables are candidate-graph sized, not
         // corpus sized.
-        labels = checkpoint(minned
+        labels = Fence(minned
           .join(minned.select(col("node").as("l_node"),
             col("label").as("l_label")),
             col("label") === col("l_node"))
@@ -1893,7 +1881,7 @@ FROM agg, tot ORDER BY n_bands DESC"""
     * by the bucket width. The bucket column is named `_rb` so
     * PlanAuditSpec can tell offsets-table lang windows from corpus ones.
     *
-    * CALLERS MUST FENCE `base` (localCheckpoint) when its lineage is
+    * CALLERS MUST FENCE `base` ([[Fence]]) when its lineage is
     * non-trivial: the offsets branch re-plans the base subtree, so an
     * unfenced classifier/LM chain doubles per rankPerKey call —
     * quality_fusion's chained ranks hit 166 exchanges before its fence.
@@ -2443,7 +2431,7 @@ FROM agg, tot ORDER BY n_bands DESC"""
     val langs = corpus.select(col("doc_id"), col("lang"))
     // fenced: the rank's offsets branch and the totals agg would each
     // re-plan (and re-run) the perplexity chain otherwise
-    val base = ppl.join(langs, "doc_id").localCheckpoint()
+    val base = ppl.join(langs, "doc_id").transform(Fence)
     val totals = base.groupBy("lang").agg(count(lit(1)).as("n_total"))
     val ranked = rankPerKey(base, "lang",
       floor(col("perplexity") / 16.0d),
@@ -2629,17 +2617,14 @@ FROM agg, tot ORDER BY n_bands DESC"""
     // n_tri is derived as sum(c_tri) from the type frame (≡ count of
     // occurrence rows, exactly — every occurrence lands in one type
     // group), which drops the third pass over the occurrence rows.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    val tri = fence(corpus
+    val tri = Fence(corpus
       .select(col("doc_id"), posexplode(tokens(col("text")))
         .as(Seq("pos", "w1")))
       .withColumn("w2", lead(col("w1"), 1).over(byDoc))
       .withColumn("w3", lead(col("w1"), 2).over(byDoc))
       .filter(col("w3").isNotNull))
-    val cTri = fence(tri.groupBy("w1", "w2", "w3")
+    val cTri = Fence(tri.groupBy("w1", "w2", "w3")
       .agg(count(lit(1)).cast(LongType).as("c_tri")))
     val cB12 = cTri.groupBy("w1", "w2")
       .agg(sum(col("c_tri")).cast(LongType).as("c_b12"))
@@ -2784,7 +2769,7 @@ FROM agg, tot ORDER BY n_bands DESC"""
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .transform(Fence)
     val top = tf.orderBy(col("freq").desc, col("token")).limit(ZipfTopN)
       // post-limit numbering: <= ZipfTopN rows (the simTopK note)
       .withColumn("rank", row_number()

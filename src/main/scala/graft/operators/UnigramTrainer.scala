@@ -224,12 +224,9 @@ unsym AS MATERIALIZED (SELECT word,
   private[graft] def trainOn(spark: SparkSession,
       corpus: DataFrame): Trained = {
     import spark.implicits._
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def fence(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // THE one corpus pass: whitespace words -> frequencies, fenced so
     // every EM round reads a vocab-sized leaf, never the corpus
-    val words = fence(corpus
+    val words = Fence(corpus
       .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq")))

@@ -155,7 +155,7 @@ object WordPieceTrainer {
     import spark.implicits._
     var syms = vocab
       .select(col("freq"), initialSymsCol(col("word")).as("syms"))
-      .localCheckpoint()
+      .transform(Fence)
     val learned = mutable.ArrayBuffer.empty[MergeRow]
     var round = 1
     var exhausted = false
@@ -198,7 +198,7 @@ object WordPieceTrainer {
           syms = syms
             .select(col("freq"),
               BpeTrainer.mergePairTo(col("syms"), a, b, merged).as("syms"))
-            .localCheckpoint()
+            .transform(Fence)
           round += 1
       }
     }

@@ -78,28 +78,38 @@ class AlarmStateProcessor(cfg: HealthCheckConfig,
 
   override def handleInputRows(key: String, rows: Iterator[MetricInput],
       timers: TimerValues): Iterator[TransitionEvent] = {
+    val fresh = !alarm.exists()
     var snap =
-      if (alarm.exists()) alarm.get()
-      else AlarmSnapshot(AlarmStatus.Ok, Long.MinValue, 0L, 0)
+      if (fresh) AlarmSnapshot(AlarmStatus.Ok, Long.MinValue, 0L, 0)
+      else alarm.get()
     // Rows within a micro-batch arrive in ARBITRARY order (shuffled), so the
     // key's evaluation origin must be the batch MINIMUM — initializing from
     // the first row seen would silently drop every earlier minute in the
-    // batch as "late". The buffer is one key's slice of one micro-batch
-    // (bounded by the trigger interval), not unbounded state.
-    val batch = rows.map { r =>
-      (Math.floorDiv(r.tsMs, periodMs) * periodMs, r.value)
-    }.toArray
-    if (snap.nextMinuteMs == Long.MinValue && batch.nonEmpty)
-      snap = snap.copy(nextMinuteMs = batch.iterator.map(_._1).min)
+    // batch as "late". The batch folds to one max per period first, so the
+    // state store sees one read/update per period, not per row; the buffer
+    // is one key's slice of one micro-batch (bounded by the trigger
+    // interval), not unbounded state.
+    val batch = scala.collection.mutable.HashMap.empty[Long, Double]
+    rows.foreach { r =>
+      val m = Math.floorDiv(r.tsMs, periodMs) * periodMs
+      // `>` as in the state update below (math.max would let a NaN win)
+      val cur = batch.getOrElse(m, Double.NegativeInfinity)
+      batch.update(m, if (r.value > cur) r.value else cur)
+    }
+    if (fresh && batch.nonEmpty)
+      snap = snap.copy(nextMinuteMs = batch.keysIterator.min)
     batch.foreach { case (m, value) =>
       if (m >= snap.nextMinuteMs) { // on-time (late-beyond-evaluation dropped)
         val cur = if (minuteMax.containsKey(m)) minuteMax.getValue(m)
           else Double.NegativeInfinity
         if (value > cur) minuteMax.updateValue(m, value)
-        // evaluate this period once the watermark passes its end
-        getHandle.registerTimer(m + periodMs)
       }
     }
+    // ONE timer per key, armed at its first period's end: every firing
+    // evaluates all due periods and re-arms the next period end
+    // ([[handleExpiredTimer]]), so the pending timer always covers a later
+    // row's period.
+    if (fresh) getHandle.registerTimer(snap.nextMinuteMs + periodMs)
     alarm.update(snap)
     Iterator.empty
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.model.AlarmTransition
 
@@ -38,17 +38,6 @@ object StreamSinks {
       .option("checkpointLocation", checkpoint)
       .partitionBy("bucket")
       .outputMode("append")
-
-  /** O3: alarm-transition append to a named in-memory table (tests) —
-    * production swaps the format for a real notification/queue sink.
-    */
-  def transitionsToMemory(transitions: Dataset[TransitionEvent], name: String,
-      checkpoint: String): StreamingQuery =
-    transitions.writeStream
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
 
   /** O3 (typed rows): transitions via foreachBatch — the hook where a real
     * deployment calls its notification client once per micro-batch with

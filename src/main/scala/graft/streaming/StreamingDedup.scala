@@ -283,10 +283,8 @@ object StreamingDedup extends Logging {
       .filter(size(col("toks")) >= len)
       .select(col("doc_id"),
         (size(col("toks")) - (len - 1)).cast("long").as("n_grams"),
-        explode(transform(
-          sequence(lit(0L), (size(col("toks")) - len).cast("long")),
-          i => md5(concat_ws(" ", slice(col("toks"), i + lit(1), lit(len))))))
-          .as("h"))
+        explode(graft.expressions.VectorExpressions
+          .shingleHashesNative(col("toks"), len)).as("h"))
       .filter(call_function("graft_might_contain", lit(bloomBytes), col("h")))
       .join(hashes, Seq("h")) // stream-static exact verify (hashes distinct)
       .groupBy(col("doc_id"), col("n_grams"))
