@@ -11,7 +11,8 @@ import graft.model.{AlarmTransition, HealthCheckConfig}
   * chain (SURVEY §3 E3, §7.2).
   *
   * The 1-minute MAX aggregation happens INSIDE [[AlarmStateProcessor]]
-  * (MapState per open period) rather than as a separate
+  * (the open periods' maxes ride in each stream's one state row) rather
+  * than as a separate
   * `groupBy(window(...))`: one stateful operator instead of two chained
   * ones — fewer watermark interactions, one state store, one shuffle on
   * `streamName`, and the gap timers see every period directly.

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.model.{AlarmStatus, BreachReason, HealthCheckConfig}
-import graft.streaming.{AlarmPipeline, MetricInput, TransitionEvent}
+import graft.streaming.{AlarmPipeline, MetricInput, PeriodMax, TransitionEvent}
 
 /** SURVEY §7.3 names state schema evolution as one of the hard parts of a
   * long-lived `transformWithState` operator: a production alarm job WILL
@@ -24,60 +24,59 @@ import graft.streaming.{AlarmPipeline, MetricInput, TransitionEvent}
   */
 final case class AlarmSnapshotV2(
     status: String, nextMinuteMs: Long, history: Long, historyLen: Int,
-    flapCount: Option[Long])
+    open: Seq[PeriodMax], flapCount: Option[Long])
 
 /** [[graft.streaming.AlarmStateProcessor]] evolved: identical evaluation
-  * semantics (the spec pins identical transitions), same state-variable
-  * names — only the snapshot class gained `flapCount`, which counts
-  * OK<->ALARM flips (a plausible production addition: flap suppression).
+  * semantics (the spec pins identical transitions), same one-row state
+  * layout and state-variable name — only the snapshot class gained
+  * `flapCount`, which counts OK<->ALARM flips (a plausible production
+  * addition: flap suppression).
   */
 class AlarmStateProcessorV2(cfg: HealthCheckConfig)
     extends StatefulProcessor[String, MetricInput, TransitionEvent] {
 
   private val periodMs: Long = cfg.periodMinutes * 60000L
   @transient private var alarm: ValueState[AlarmSnapshotV2] = _
-  @transient private var minuteMax: MapState[Long, Double] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     alarm = getHandle.getValueState[AlarmSnapshotV2](
       "alarm", Encoders.product[AlarmSnapshotV2], TTLConfig.NONE)
-    minuteMax = getHandle.getMapState[Long, Double](
-      "minuteMax", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String, rows: Iterator[MetricInput],
       timers: TimerValues): Iterator[TransitionEvent] = {
-    var snap =
-      if (alarm.exists()) alarm.get()
-      else AlarmSnapshotV2(AlarmStatus.Ok, Long.MinValue, 0L, 0, Some(0L))
-    val batch = rows.map { r =>
-      (Math.floorDiv(r.tsMs, periodMs) * periodMs, r.value)
-    }.toArray
-    if (snap.nextMinuteMs == Long.MinValue && batch.nonEmpty)
-      snap = snap.copy(nextMinuteMs = batch.iterator.map(_._1).min)
-    batch.foreach { case (m, value) =>
-      if (m >= snap.nextMinuteMs) {
-        val cur = if (minuteMax.containsKey(m)) minuteMax.getValue(m)
-          else Double.NegativeInfinity
-        if (value > cur) minuteMax.updateValue(m, value)
-        getHandle.registerTimer(m + periodMs)
-      }
+    val prev = alarm.get()
+    val maxes = scala.collection.mutable.HashMap.empty[Long, Double]
+    if (prev != null) prev.open.foreach(p => maxes.update(p.startMs, p.max))
+    var minM = Long.MaxValue
+    rows.foreach { r =>
+      val m = Math.floorDiv(r.tsMs, periodMs) * periodMs
+      if (m < minM) minM = m
+      val cur = maxes.getOrElse(m, Double.NegativeInfinity)
+      if (r.value > cur) maxes.update(m, r.value)
     }
-    alarm.update(snap)
+    val snap =
+      if (prev != null) prev
+      else AlarmSnapshotV2(AlarmStatus.Ok, minM, 0L, 0, Nil, Some(0L))
+    val open = maxes.iterator.collect {
+      case (m, v) if m >= snap.nextMinuteMs => PeriodMax(m, v)
+    }.toSeq.sortBy(_.startMs)
+    if (prev == null) getHandle.registerTimer(snap.nextMinuteMs + periodMs)
+    alarm.update(snap.copy(open = open))
     Iterator.empty
   }
 
   override def handleExpiredTimer(key: String, timers: TimerValues,
       expired: ExpiredTimerInfo): Iterator[TransitionEvent] = {
     var snap = alarm.get()
+    var open = snap.open
     val out = Seq.newBuilder[TransitionEvent]
     val horizon =
       math.max(expired.getExpiryTimeInMs, timers.getCurrentWatermarkInMs)
     while (snap.nextMinuteMs + periodMs <= horizon) {
       val m = snap.nextMinuteMs
-      val observed =
-        if (minuteMax.containsKey(m)) Some(minuteMax.getValue(m)) else None
-      minuteMax.removeKey(m)
+      val observed = open.headOption.filter(_.startMs == m).map(_.max)
+      if (observed.isDefined) open = open.tail
       val breach = observed.forall(_ > cfg.thresholdSeconds)
       val reason = observed match {
         case None => BreachReason.MissingData
@@ -101,7 +100,7 @@ class AlarmStateProcessorV2(cfg: HealthCheckConfig)
           Some(snap.flapCount.getOrElse(0L) + 1L)
         } else snap.flapCount
       snap = AlarmSnapshotV2(newStatus, m + periodMs, history, historyLen,
-        flips)
+        open, flips)
     }
     alarm.update(snap)
     getHandle.registerTimer(snap.nextMinuteMs + periodMs)

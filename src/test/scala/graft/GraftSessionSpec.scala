@@ -13,6 +13,9 @@ class GraftSessionSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val s = GraftSession.configure(spark)
     GraftSession.configure(s) // second call must not throw or re-register
     s.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+    // RocksDB commits write a changelog, not a full snapshot
+    s.conf.get("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled") shouldBe "true"
     // native function resolves through plain SQL
     s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect().head.getDouble(0) shouldBe 11.0

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local session for all specs. RocksDB state store is the default so
+/** Shared local session for all specs, configured by
+  * [[GraftSession.configure]]. RocksDB state store is the default so
   * streaming specs exercise `transformWithState` against the provider a real
-  * cluster would run (the HDFS-backed default does not support it).
+  * cluster would run (the HDFS-backed default does not support it), with
+  * the contract's changelog checkpointing on.
   */
 trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 
@@ -31,7 +33,8 @@ object SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.sql.streaming.checkpointLocation.deleteOnExit", "true")
     .getOrCreate()
-    graft.expressions.VectorExpressions.register(s)
-    s
+    // the engine's full session contract, applied once up front, so every
+    // suite sees the same confs whatever the suite order
+    GraftSession.configure(s)
   }
 }
