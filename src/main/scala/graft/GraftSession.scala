@@ -18,6 +18,15 @@ import org.apache.spark.sql.SparkSession
   *    are taken in the background), which keeps the streaming operators'
   *    per-micro-batch commit cost proportional to what changed. Other
   *    state store providers ignore it;
+  *  - `fs.AbstractFileSystem.file.impl=graft.ForkFreeLocalFs` — the
+  *    `file:` filesystem behind Spark's `FileContext` checkpoint writes
+  *    (offset and commit logs, RocksDB changelogs). Hadoop's own one,
+  *    without its native library, forks a `chmod` per file created and
+  *    four `readlink`s per checkpoint rename, on the micro-batch's
+  *    blocking commit path; [[ForkFreeLocalFs]] does both in the JVM and
+  *    keeps the atomic rename and the `.crc` checksum files. It reaches
+  *    the checkpoint code because session confs are copied into every
+  *    query's Hadoop configuration; other schemes are untouched;
   *  - the graft native expressions registered (`graft_dot`,
   *    `graft_simhash32`, …) — operator code paths and the SQL surface
   *    both resolve them;
@@ -27,21 +36,26 @@ import org.apache.spark.sql.SparkSession
   *    is part of the engine's scale story.
   *
   * Cluster deployments that cannot call [[local]] can instead set
-  * `spark.sql.extensions=graft.expressions.GraftExtensions` plus the three
+  * `spark.sql.extensions=graft.expressions.GraftExtensions` plus the four
   * conf lines above on ANY session (the [[configure]] half is idempotent
   * and safe on a running session).
   */
 object GraftSession {
 
+  /** Hadoop's key for the `file:` scheme's `AbstractFileSystem`. */
+  val LocalFsConf = "fs.AbstractFileSystem.file.impl"
+
   /** Apply the engine's session contract to an existing session:
-    * UTC + nanos conf + RocksDB changelog checkpointing + native-function
-    * registration. Idempotent.
+    * UTC + nanos conf + RocksDB changelog checkpointing + the fork-free
+    * local checkpoint filesystem + native-function registration.
+    * Idempotent.
     */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
+    spark.conf.set(LocalFsConf, classOf[ForkFreeLocalFs].getName)
     graft.sources.Tables.ensureNanosAsLong(spark)
     graft.expressions.VectorExpressions.register(spark)
     spark

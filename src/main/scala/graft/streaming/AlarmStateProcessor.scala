@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
 import graft.model.{AlarmMode, AlarmStatus, BreachReason, HealthCheckConfig}
@@ -83,12 +83,12 @@ class AlarmStateProcessor(cfg: HealthCheckConfig,
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     alarm = getHandle.getValueState[AlarmSnapshot](
-      "alarm", Encoders.product[AlarmSnapshot], TTLConfig.NONE)
+      "alarm", AlarmStateProcessor.snapshotEncoder, TTLConfig.NONE)
     // registered only when the mode uses it — a Fixed-mode query keeps
     // its exact pre-adaptive state schema
     if (mode == AlarmMode.Adaptive)
       baseline = getHandle.getValueState[BaselineState](
-        "baseline", Encoders.product[BaselineState], TTLConfig.NONE)
+        "baseline", AlarmStateProcessor.baselineEncoder, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String, rows: Iterator[MetricInput],
@@ -198,4 +198,15 @@ class AlarmStateProcessor(cfg: HealthCheckConfig,
     getHandle.registerTimer(snap.nextMinuteMs + periodMs)
     out.result().iterator
   }
+}
+
+object AlarmStateProcessor {
+  // derived once per JVM: `init` runs per partition per micro-batch, and
+  // reflective product-encoder derivation is a measurable share of a
+  // canary step's CPU. Encoders are immutable; each state variable makes
+  // its own serializer from them.
+  private val snapshotEncoder: Encoder[AlarmSnapshot] =
+    Encoders.product[AlarmSnapshot]
+  private val baselineEncoder: Encoder[BaselineState] =
+    Encoders.product[BaselineState]
 }

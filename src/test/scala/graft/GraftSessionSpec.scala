@@ -16,6 +16,11 @@ class GraftSessionSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // RocksDB commits write a changelog, not a full snapshot
     s.conf.get("spark.sql.streaming.stateStore.rocksdb." +
       "changelogCheckpointing.enabled") shouldBe "true"
+    // checkpoint files go through the fork-free local filesystem: the
+    // session conf reaches the Hadoop conf every query is handed
+    s.conf.get(GraftSession.LocalFsConf) shouldBe classOf[ForkFreeLocalFs].getName
+    org.apache.hadoop.fs.AbstractFileSystem.get(java.net.URI.create("file:///"),
+      s.sessionState.newHadoopConf()) shouldBe a[ForkFreeLocalFs]
     // native function resolves through plain SQL
     s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect().head.getDouble(0) shouldBe 11.0

@@ -19,6 +19,11 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private def exchanges(plan: String): Int = PlanAudit.exchangeCount(plan)
 
+  // live (unfenced) partition-less WindowExecs the bounded-input test
+  // measures, and the whitelisted queries they come from
+  private val LiveWindowQueriesFloor = 28
+  private val LiveWindowsFloor = 32
+
   test("no query plans a cartesian product") {
     plans.foreach { case (name, p) =>
       withClue(s"$name: ") { p should not include "CartesianProduct" }
@@ -77,7 +82,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
       }
       self ++ p.subqueries.flatMap(allNodes)
     }
-    PlanAudit.unpartitionedWindowBounds.toSeq.sortBy(_._1).foreach {
+    val observed = PlanAudit.unpartitionedWindowBounds.toSeq.sortBy(_._1).map {
       case (name, cap) =>
         val df = SparkEntry.queries(name)(spark, sf)
         df.write.format("noop").mode("overwrite").save()
@@ -97,7 +102,16 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
             rows.foreach(_ should be <= cap)
           }
         }
+        name -> windows.size
     }
+    // a window moved behind a fence drops out of the loop above silently:
+    // the live windows this run checked must not fall below today's count
+    val live = observed.filter(_._2 > 0)
+    info(s"live partition-less windows: ${live.map(_._2).sum} in " +
+      s"${live.size} of ${observed.size} whitelisted queries: " +
+      live.map { case (n, c) => s"$n=$c" }.mkString(", "))
+    live.size should be >= LiveWindowQueriesFloor
+    live.map(_._2).sum should be >= LiveWindowsFloor
   }
 
   test("no non-whitelisted query plans a stratum-keyed sort window") {
@@ -256,6 +270,57 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val opt = SparkEntry.queries("hc_latency_event_time")(spark, sf)
       .queryExecution.optimizedPlan.toString
     """get_json_object""".r.findAllIn(opt).size shouldBe 1
+  }
+
+  test("the event-time consumer parses and UTF-8-checks each payload once") {
+    // HealthCheckConsumer.metrics evaluates the decode -> get_json_object
+    // -> to_timestamp chain in one generator; a filter over a projected
+    // `since` would re-inline the chain into the predicate (two parses,
+    // three UTF-8 checks per record). Pinned in the executed plan of the
+    // batch path and of a micro-batch of the streaming path.
+    import java.sql.Timestamp
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+      StreamingQueryWrapper}
+    import org.apache.spark.sql.functions.lit
+    import graft.model.{HealthCheckConfig, LatencyMode}
+    import graft.streaming.HealthCheckConsumer
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cfg = HealthCheckConfig(latencyMode = LatencyMode.EventTime)
+    val now = lit(new Timestamp(1666000807000L))
+    val arn = "arn:aws:kinesis:eu-west-1:1:stream/s"
+    val rows = Seq(
+      ("k", "1", """{"currentInstant":"2022-10-17T10:00:00Z"}""".getBytes,
+        1666000801L, arn),
+      ("k", "2", Array[Byte](0x7b, 0xff.toByte, 0x7d), 1666000802L, arn))
+    val cols = Seq("partitionKey", "sequenceNumber", "data",
+      "approximateArrivalTimestamp", "eventSourceARN")
+    def counts(plan: String): (Int, Int) =
+      ("get_json_object".r.findAllIn(plan).size,
+        """isValid\(\)""".r.findAllIn(plan).size)
+
+    // an RDD, not a local Seq: the optimizer would fold the whole chain
+    // over a local relation into constant rows
+    val batch = HealthCheckConsumer.metrics(
+      spark.sparkContext.parallelize(rows, 1).toDF(cols: _*), cfg, now)
+    batch.collect().map(_.getAs[Double]("value")).toSeq shouldBe Seq(7.0)
+    withClue("batch: ") {
+      counts(batch.queryExecution.executedPlan.toString) shouldBe ((1, 1))
+    }
+
+    val input = MemoryStream[(String, String, Array[Byte], Long, String)]
+    val q = HealthCheckConsumer.metrics(input.toDF().toDF(cols: _*), cfg, now)
+      .writeStream.format("memory").queryName("t_consumer_parse_once")
+      .outputMode("append").start()
+    try {
+      input.addData(rows)
+      q.processAllAvailable()
+      spark.table("t_consumer_parse_once").collect()
+        .map(_.getAs[Double]("value")).toSeq shouldBe Seq(7.0)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan.toString
+      withClue("streaming: ") { counts(plan) shouldBe ((1, 1)) }
+    } finally q.stop()
   }
 
   test("decontaminate and text_tfidf bound their corpus text scans") {
