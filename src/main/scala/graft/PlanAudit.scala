@@ -414,7 +414,10 @@ object PlanAudit {
     // orderBy (the lm_kneser_ney re-derive class)
     "ngram_novelty" -> 7,
     "dedup_jaccard" -> 10,
-    "dedup_pipeline" -> 14,
+    // representatives behind one Fence: the band shuffle of each
+    // self-join side (one reused exchange at run time) + the distinct-pair
+    // agg + orderBy
+    "dedup_pipeline" -> 4,
     "emb_neardup" -> 10,
     "sim_topk" -> 1, // TakeOrdered, no global sort
     "sim_topk_ivf" -> 4,

@@ -118,6 +118,8 @@ case class MinHashBandDigests(child: Expression) extends UnaryExpression {
   * kept as the tested spec) and to the DuckDB oracle; exists because the HOF
   * evaluates interpreted with per-element boxing — this is the blocking key
   * of the global-min-hash dedup (dedup_jaccard), computed for every document.
+  * A null element is skipped, as the HOF's `array_min` skips its null md5;
+  * an empty or all-null set yields null.
   */
 case class MinHashOne(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -154,9 +156,11 @@ object MinHashOne {
     var i = 0
     val n = shingles.numElements()
     while (i < n) {
-      Md5Util.digestInto(prefix, shingles.getUTF8String(i).getBytes, tmp)
-      if (min == null) min = java.util.Arrays.copyOf(tmp, 16)
-      else if (Md5Util.less(tmp, min)) System.arraycopy(tmp, 0, min, 0, 16)
+      if (!shingles.isNullAt(i)) {
+        Md5Util.digestInto(prefix, shingles.getUTF8String(i).getBytes, tmp)
+        if (min == null) min = java.util.Arrays.copyOf(tmp, 16)
+        else if (Md5Util.less(tmp, min)) System.arraycopy(tmp, 0, min, 0, 16)
+      }
       i += 1
     }
     if (min == null) null else UTF8String.fromString(Md5Util.hex(min))
@@ -166,7 +170,8 @@ object MinHashOne {
 /** `minhash_all(shingleSet, n)`: the full n-seed MinHash signature in ONE
   * pass over the shingle set — element k is bit-identical to
   * `minhash1(shingleSet, k)` (lexicographic MIN of md5(k || ':' || shingle);
-  * an empty set yields n nulls, matching minhash1's null). Exists because
+  * an empty or all-null set yields n nulls, and null elements are skipped,
+  * matching minhash1). Exists because
   * `array(minhash1(s,0), …, minhash1(s,15))` builds 16 independent
   * expressions that each re-read and re-stringify every shingle; here each
   * shingle string materializes once and feeds all n seeded digests
@@ -206,14 +211,16 @@ object MinHashAll {
     var i = 0
     val n = shingles.numElements()
     while (i < n) {
-      val bytes = shingles.getUTF8String(i).getBytes
-      var k = 0
-      while (k < nHashes) {
-        Md5Util.digestInto(Md5Util.seedPrefix(k), bytes, tmp)
-        if (mins(k) == null) mins(k) = java.util.Arrays.copyOf(tmp, 16)
-        else if (Md5Util.less(tmp, mins(k)))
-          System.arraycopy(tmp, 0, mins(k), 0, 16)
-        k += 1
+      if (!shingles.isNullAt(i)) {
+        val bytes = shingles.getUTF8String(i).getBytes
+        var k = 0
+        while (k < nHashes) {
+          Md5Util.digestInto(Md5Util.seedPrefix(k), bytes, tmp)
+          if (mins(k) == null) mins(k) = java.util.Arrays.copyOf(tmp, 16)
+          else if (Md5Util.less(tmp, mins(k)))
+            System.arraycopy(tmp, 0, mins(k), 0, 16)
+          k += 1
+        }
       }
       i += 1
     }

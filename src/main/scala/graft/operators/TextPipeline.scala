@@ -1395,17 +1395,25 @@ FROM agg, tot ORDER BY n_bands DESC"""
   def dedupPipeline(spark: SparkSession, sfDir: String): DataFrame =
     dedupPipelineFrom(spark, docs(spark, sfDir))
 
-  /** [[dedupPipeline]] over an arbitrary (doc_id, text) corpus. */
+  /** [[dedupPipeline]] over an arbitrary (doc_id, text) corpus.
+    *
+    * The representatives materialize once, in one [[Fence]]: digest group
+    * → `min(doc_id)`, `min(text)`, `n_copies` → shingle set. The band
+    * explode and both Jaccard-verify joins read that one checkpoint, so the
+    * corpus is scanned and grouped once per call. A `repartition(doc_id)`
+    * did not hold as a fence here: the band branch prunes `n_copies` and
+    * the verify branch keeps it, so Catalyst planned two different
+    * scan → digest-aggregate branches (and shuffled every shingle set by
+    * `doc_id` in each) instead of reusing one exchange.
+    */
   def dedupPipelineFrom(spark: SparkSession, corpus: DataFrame): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val reps = corpus
+    val sets = Fence(corpus
       .groupBy(md5(lower(trim(col("text")))).as("text_hash"))
       .agg(min("doc_id").as("doc_id"), min("text").as("text"),
         count(lit(1)).as("n_copies"))
-    val sets = reps
       .select(col("doc_id"), col("n_copies"), graft.expressions.VectorExpressions
-        .shingleSetNative(col("text")).as("s"))
-      .repartition(col("doc_id"))
+        .shingleSetNative(col("text")).as("s")))
     val bands = sets
       .select(col("doc_id"),
         posexplode(graft.expressions.VectorExpressions

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.operators.{BpeTrainer, DataQuality}
+import graft.operators.{BpeTrainer, DataQuality, TextPipeline}
 
 /** [[graft.operators.Fence]] is the one materialization fence: with a
   * checkpoint dir set, every operator's fences are reliable, so losing the
@@ -37,7 +37,8 @@ class FenceSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val builds: Seq[(String, () => DataFrame)] = Seq(
       "quality_fusion" -> (() => DataQuality.qualityFusion(spark, sf)),
       "bpe_distributed" -> (() =>
-        BpeTrainer.bpeMergesDistributedFrom(spark, corpus(), nMerges = 4)))
+        BpeTrainer.bpeMergesDistributedFrom(spark, corpus(), nMerges = 4)),
+      "dedup_pipeline" -> (() => TextPipeline.dedupPipelineFrom(spark, corpus())))
     val expected = builds.map { case (name, make) =>
       val (df, ids) = build(make)
       try name -> rows(df) finally drop(ids)

@@ -323,6 +323,68 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     } finally q.stop()
   }
 
+  test("dedup_pipeline builds its representatives once, behind one fence") {
+    // the representative frame (digest group -> shingle set) is a Fence:
+    // every branch of the executed plan, the band explode and both verify
+    // joins alike, reads that one checkpoint. A repartition(doc_id) stand-in
+    // planned two scan -> digest-aggregate branches, each with its own
+    // doc_id shuffle.
+    import org.apache.spark.sql.execution.{GenerateExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object H extends AdaptiveSparkPlanHelper
+    val df = graft.operators.TextPipeline.dedupPipelineFrom(spark,
+      spark.read.parquet(s"$sf/documents.parquet"))
+    df.collect() should not be empty
+    val plan = df.queryExecution.executedPlan
+    // checkpoint scans under `p`, through reused exchanges too
+    def scans(p: SparkPlan): Seq[RDDScanExec] = H.collect(p) {
+      case s: RDDScanExec => Seq(s)
+      case r: ReusedExchangeExec => scans(r.child)
+    }.flatten
+    def generates(p: SparkPlan): Seq[GenerateExec] = H.collect(p) {
+      case g: GenerateExec => Seq(g)
+      case r: ReusedExchangeExec => generates(r.child)
+    }.flatten
+
+    withClue("one checkpoint: ") {
+      scans(plan) should not be empty
+      scans(plan).map(_.rdd.id).distinct should have size 1
+    }
+    withClue("the band explode reads it: ") {
+      generates(plan) should not be empty
+      generates(plan).foreach(g => scans(g) should not be empty)
+    }
+    val verifyJoins = H.collect(plan) {
+      case j: BaseJoinExec if j.leftKeys.flatMap(_.references.map(_.name))
+        .exists(Set("doc_a", "doc_b")) => j
+    }
+    withClue("both verify joins read it: ") {
+      verifyJoins should have size 2
+      verifyJoins.foreach { j =>
+        val setSide = j.children.filter(c => generates(c).isEmpty)
+        setSide should have size 1
+        scans(setSide.head) should not be empty
+      }
+    }
+    withClue("no digest aggregate: ") {
+      H.collect(plan) {
+        case a: BaseAggregateExec
+          if a.aggregateExpressions.exists(_.toString.contains("min(text")) => a
+      } shouldBe empty
+      plan.toString should not include "md5("
+    }
+    withClue("no doc_id repartition: ") {
+      H.collect(plan) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL &&
+          e.outputPartitioning.toString.contains("doc_id") => e
+      } shouldBe empty
+    }
+  }
+
   test("decontaminate and text_tfidf bound their corpus text scans") {
     // decontaminate: single winnow subtree by construction (one scan total).
     // text_tfidf: tf and the df keyed-agg branch each plan the tokenize

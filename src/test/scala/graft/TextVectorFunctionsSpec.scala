@@ -167,6 +167,51 @@ class TextVectorFunctionsSpec extends AnyFunSuite with Matchers with SparkTestBa
     out.foreach { case (n, h) => n shouldBe h }
   }
 
+  test("native MinHashOne and MinHashAll match the HOF on arrays with nulls, " +
+      "empties and non-ASCII text (property)") {
+    // the HOF's md5 of a null element is null and array_min skips it, so
+    // the native loops skip null elements; a null array stays null
+    graft.expressions.VectorExpressions.register(spark)
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val element: Gen[Option[String]] = Gen.frequency(
+      2 -> Gen.const(None),
+      1 -> Gen.const(Some("")),
+      3 -> Gen.oneOf("a b c", "über слово", "日本 語", "café ñ", "x")
+        .map(Some(_)),
+      3 -> Gen.alphaNumStr.map(Some(_)),
+      2 -> Gen.listOf(Gen.choose('\u00a0', '\u30ff')).map(cs => Some(cs.mkString)))
+    val arrays: Gen[Option[Seq[Option[String]]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      2 -> Gen.const(Some(Seq.empty)),
+      2 -> Gen.listOfN(3, Gen.const(None)).map(Some(_)),
+      10 -> Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, element)).map(Some(_)))
+    val cases = (0 until 200).map(i =>
+      Tuple1(arrays.pureApply(Gen.Parameters.default, Seed(7L + i))))
+    val seeds = Seq(0, 5, 99)
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = df.select(
+        array(seeds.map(k => graft.expressions.VectorExpressions
+          .minHash1Native($"s", k)): _*).as("one"),
+        array(seeds.map(k => minHash($"s", k)): _*).as("hof"),
+        graft.expressions.VectorExpressions.minHashAllNative($"s", 16).as("all"),
+        array((0 until 16).map(k => minHash($"s", k)): _*).as("hof16"))
+        .as[(Seq[String], Seq[String], Option[Seq[String]], Seq[String])]
+        .collect()
+      out should have size cases.size.toLong
+      out.foreach { case (one, hof, all, hof16) =>
+        one shouldBe hof
+        all.getOrElse(Seq.fill(16)(null)) shouldBe hof16
+      }
+      // the generated cases reach every branch
+      out.count(_._2.forall(_ == null)) should be > 0
+      out.count(_._2.forall(_ != null)) should be > 0
+    }
+    // a local relation evaluates interpreted; an RDD-backed one runs codegen
+    check(cases.toDF("s"))
+    check(spark.sparkContext.parallelize(cases, 2).toDF("s"))
+  }
+
   test("native HashEmbed64 matches the HOF hash-embed fold exactly " +
       "(seed A and seed B offsets)") {
     graft.expressions.VectorExpressions.register(spark)
