@@ -80,16 +80,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-bench")
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val (full, summary) = run(spark, sfDir, only)
@@ -99,9 +91,10 @@ object Bench {
   }
 
   /** The whole sweep as a callable (BenchTelemetrySpec drives it at
-    * sf0.001 to pin the report schema). Returns (full per-query JSON
-    * line, compact summary line); main writes the full line to
-    * bench_out.json and prints the summary.
+    * sf0.001 to pin the report schema) over a session that carries the
+    * [[GraftSession]] contract. Returns (full per-query JSON line,
+    * compact summary line); main writes the full line to bench_out.json
+    * and prints the summary.
     */
   def run(spark: SparkSession, sfDir: String,
       only: Option[Set[String]] = None,
@@ -109,7 +102,6 @@ object Bench {
       queriesOverride: Option[Map[String,
         (SparkSession, String) => org.apache.spark.sql.DataFrame]] = None)
       : (String, String) = {
-    graft.expressions.VectorExpressions.register(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     // volume + noise telemetry, summed over task-end events: total
@@ -362,56 +354,40 @@ object Bench {
     // across the 250+ queries that never read them.
     val selected = queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // family membership comes from registries NEXT TO the shared-artifact
-    // caches (Graph / TextPipeline / SimilarityPipeline) — round-13
-    // ADVICE: a consumer added to SparkEntry but missing from its family
-    // set would have its shared leaf dropped by the per-query orphan
-    // pass below and read a truncated lineage mid-sweep
-    val clusterNames = graft.operators.TextPipeline.benchFamilyQueries
-    val knnNames = graft.operators.SimilarityPipeline.benchFamilyQueries
-    def isGraph(n: String) = graft.operators.Graph.isBenchFamilyQuery(n)
+    // One block per shared artifact, in this order: its build line (the
+    // consumers then measure warm-cache; the one-time build is charged
+    // here, the round-10 discipline), its consumers with the warm
+    // artifact protected from the per-query orphan pass, then the
+    // release. Family membership comes from registries NEXT TO the
+    // shared-artifact caches (Graph / TextPipeline / SimilarityPipeline)
+    // — round-13 ADVICE: a consumer added to SparkEntry but missing from
+    // its family set would have its shared leaf dropped by the per-query
+    // orphan pass and read a truncated lineage mid-sweep.
+    import graft.operators.{Graph, SimilarityPipeline, TextPipeline}
+    val families: Seq[(String, (SparkSession, String) => Unit,
+        String => Boolean, (SparkSession, String) => Unit)] = Seq(
+      ("graph_edge_build", Graph.warmSharedEdges,
+        Graph.isBenchFamilyQuery, Graph.releaseSharedEdges),
+      ("dedup_cluster_build", TextPipeline.warmSharedClusterLabels,
+        TextPipeline.benchFamilyQueries,
+        TextPipeline.releaseSharedClusterLabels),
+      ("knn_edge_build", SimilarityPipeline.warmMutualKnnEdges,
+        SimilarityPipeline.benchFamilyQueries,
+        SimilarityPipeline.releaseMutualKnnEdges))
+    val familyRuns = families.map { case (buildName, warm, member, release) =>
+      val build = buildLine(buildName)(warm(spark, sfDir))
+      val protect = liveIds() // baseline + the warm artifact
+      val lines = selected.filter(q => member(q._1)).map { case (n, f) =>
+        val l = requiesce(measure(n, f))
+        dropOrphansExcept(protect) // e.g. hits/kcore per-round leftovers
+        l
+      }
+      release(spark, sfDir)
+      (build, lines)
+    }
+    val familyLines = familyRuns.flatMap(_._2)
     val rest = selected.filterNot { case (n, _) =>
-      isGraph(n) || clusterNames(n) || knnNames(n) }
-
-    val graphBuild = buildLine("graph_edge_build") {
-      graft.operators.Graph.warmSharedEdges(spark, sfDir)
-    }
-    val protectGraph = liveIds() // baseline + the warm edge artifacts
-    val graphLines = selected.filter(q => isGraph(q._1))
-      .map { case (n, f) =>
-        val l = requiesce(measure(n, f))
-        dropOrphansExcept(protectGraph) // hits/kcore per-round leftovers
-        l
-      }
-    graft.operators.Graph.releaseSharedEdges(spark, sfDir)
-
-    // dedup_clusters and canonical_select measure warm-cache; the one-time
-    // dedup+CC chain is charged here (round-10 discipline).
-    val clusterBuild = buildLine("dedup_cluster_build") {
-      graft.operators.TextPipeline.warmSharedClusterLabels(spark, sfDir)
-    }
-    val protectCluster = liveIds()
-    val clusterLines = selected.filter(q => clusterNames(q._1))
-      .map { case (n, f) =>
-        val l = requiesce(measure(n, f))
-        dropOrphansExcept(protectCluster)
-        l
-      }
-    graft.operators.TextPipeline.releaseSharedClusterLabels(spark, sfDir)
-
-    // knn_triangles/knn_kcore/quality_propagate measure warm-cache; the
-    // kmeans + kNN build is charged here.
-    val knnEdgeBuild = buildLine("knn_edge_build") {
-      graft.operators.SimilarityPipeline.warmMutualKnnEdges(spark, sfDir)
-    }
-    val protectKnn = liveIds()
-    val knnLines = selected.filter(q => knnNames(q._1))
-      .map { case (n, f) =>
-        val l = requiesce(measure(n, f))
-        dropOrphansExcept(protectKnn)
-        l
-      }
-    graft.operators.SimilarityPipeline.releaseMutualKnnEdges(spark, sfDir)
+      families.exists { case (_, _, member, _) => member(n) } }
 
     // Non-family queries, alphabetical. After EACH query's timed runs,
     // its orphaned localCheckpoint blocks are dropped (no query holds a
@@ -454,8 +430,7 @@ object Bench {
       "retrieval_store" -> "retrieval_program",
       "retrieval_store_batch" -> "retrieval_program")
     val measuredByName =
-      (graphLines ++ clusterLines ++ knnLines ++ restDone)
-        .map(l => l.name -> l).toMap
+      (familyLines ++ restDone).map(l => l.name -> l).toMap
     val servingEntries = servingPairs.flatMap { case (storeQ, twinQ) =>
       (measuredByName.get(storeQ), measuredByName.get(twinQ)) match {
         case (Some(sl), Some(tl))
@@ -501,9 +476,8 @@ object Bench {
 
     spark.sparkContext.removeSparkListener(listener)
 
-    val remeasured = graphLines ++ clusterLines ++ knnLines ++ restDone
-    val all =
-      graphBuild +: clusterBuild +: knnEdgeBuild +: remeasured
+    val remeasured = familyLines ++ restDone
+    val all = familyRuns.map(_._1) ++ remeasured
     val qs = all.map {
       case Line(k, _, Some(e), _, _, _, _, _, _, _) =>
         s""""$k":{"err":"${esc(e)}"}"""

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: dumps scan pruning + exchange stats per SparkEntry query so
   * plan regressions (lost pushdown, interpreted hot paths, surprise
@@ -157,66 +156,27 @@ object PlanAudit {
   def unpartitionedWindowCount(plan: String): Int =
     """windowspecdefinition\([^,()]+ (?:ASC|DESC)""".r.findAllIn(plan).size
 
-  /** Queries whose partition-less windows are documented bounded frames —
-    * every one numbers a <= top-k / <= #bins / <= #langs post-limit result,
-    * never a corpus-sized input. A NEW query planning a partition-less
-    * window fails PlanAuditSpec unless deliberately added here.
-    */
-  val unpartitionedWindowWhitelist: Set[String] = Set(
-    // #shards-row (resp. #buckets-row) offsets prefix-sum table — the tiny
-    // second level of the two-level sharded cumsum
-    "assign_ids", "curriculum",
-    // <= #bins merged-sketch estimate windows
-    "hist_quantiles",
-    // the 32-row post-agg resample-mean rank (the offsets-table class)
-    "bootstrap_ci",
-    // <= k-row post-TakeOrdered rerank/numbering windows
-    "sim_topk", "sim_topk_ivf", "sim_topk_lsh", "sim_topk_kmeans",
-    "sim_topk_q8", "pq_topk", "pq_recall", "lsh_store", "pq_store",
-    "sim_topk_ivfpq", "ivfpq_store",
-    "sim_topk_filtered", "lsh_store_filtered", "ivfpq_store_filtered",
-    // <= NSeeds / <= kEach / <= k post-limit rank windows of the
-    // composed RAG chain (seeds, both candidate sides, fused result)
-    "retrieval_program", "retrieval_funnel",
-    // the persisted chain probe numbers the same post-limit frames
-    "retrieval_store",
-    // the filtered probe numbers the same single-query post-limit
-    // frames (textRankQ9 / vecRank / finalProjection)
-    "retrieval_store_filtered",
-    // <= kEach-row post-TakeOrdered rank windows on both RRF sides
-    "hybrid_rrf",
-    // <= k-row post-TakeOrdered rank numbering on both ranker sides
-    "ranker_agreement", "rbo_overlap",
-    // <= ZipfTopN-row post-TakeOrdered rank numbering
-    "zipf_fit",
-    // calendar-sized date-spine series (rows = span days, independent of
-    // data volume) — the dense-spine moving window IS the operator
-    "resample_daily",
-    // #sources-row supply frame (fenced): the rank + prefix-sum windows
-    // of the exact water-filling level search — the assign_ids
-    // offsets-table class
-    "budget_waterfill",
-    // #cells-row fenced frame: the largest-remainder rank window (the
-    // budget_waterfill class); eval_sample plans the same subtree
-    "eval_alloc", "eval_sample")
-
-  /** Documented input-row ceiling for EVERY whitelisted partition-less
-    * window query (round 16, VERDICT r15 #8): the bound on the LARGEST
-    * partition-less window input in its plan, volume-independent by
-    * construction — a post-limit top-k constant, a #shards/#bins/#cells
-    * offsets table, or a calendar spine; NEVER a corpus-sized frame.
-    * PlanAuditSpec enforces (a) this map and the whitelist stay in sync
-    * and (b) at runtime, every partition-less WindowExec's measured row
-    * count stays under the ceiling — so each "Moving all data to a
-    * single partition" warning at entry is attributable to a named,
+  /** The queries whose partition-less windows are documented bounded
+    * frames — every one numbers a <= top-k / <= #bins / <= #langs
+    * post-limit result, never a corpus-sized input — each with its
+    * documented input-row ceiling (round 16, VERDICT r15 #8): the bound
+    * on the LARGEST partition-less window input in its plan,
+    * volume-independent by construction — a post-limit top-k constant, a
+    * #shards/#bins/#cells offsets table, or a calendar spine; NEVER a
+    * corpus-sized frame. A NEW query planning a partition-less window
+    * fails PlanAuditSpec unless deliberately added here; at runtime the
+    * spec also checks every partition-less WindowExec's measured row
+    * count against the ceiling — so each "Moving all data to a single
+    * partition" warning at entry is attributable to a named,
     * proven-bounded frame.
     */
   val unpartitionedWindowBounds: Map[String, Long] = Map(
-    // #shards-row offsets prefix-sum tables (two-level sharded cumsum)
+    // #shards-row (resp. #buckets-row) offsets prefix-sum tables — the
+    // tiny second level of the two-level sharded cumsum
     "assign_ids" -> 4096L, "curriculum" -> 4096L,
     // <= #bins merged-sketch estimate windows
     "hist_quantiles" -> 512L,
-    // 32-row post-agg resample-mean rank
+    // the 32-row post-agg resample-mean rank (the offsets-table class)
     "bootstrap_ci" -> 64L,
     // <= k-row post-TakeOrdered rerank/numbering (k = 10..20)
     "sim_topk" -> 64L, "sim_topk_ivf" -> 64L, "sim_topk_lsh" -> 64L,
@@ -225,20 +185,30 @@ object PlanAudit {
     "sim_topk_ivfpq" -> 64L, "ivfpq_store" -> 64L,
     "sim_topk_filtered" -> 64L, "lsh_store_filtered" -> 64L,
     "ivfpq_store_filtered" -> 64L,
-    // RAG chain: seeds (<= NSeeds=4), candidate sides (<= KEach=20),
-    // fused (<= 2*KEach)
+    // post-limit rank windows of the composed RAG chain: seeds
+    // (<= NSeeds=4), candidate sides (<= KEach=20), fused (<= 2*KEach);
+    // the persisted chain probe numbers the same post-limit frames, and
+    // the filtered probe the same single-query ones (textRankQ9 /
+    // vecRank / finalProjection)
     "retrieval_program" -> 64L, "retrieval_funnel" -> 64L,
     "retrieval_store" -> 64L, "retrieval_store_filtered" -> 64L,
-    // <= 2k-row fused / paired ranker frames
+    // <= 2k-row fused / paired ranker frames: post-TakeOrdered rank
+    // windows on both RRF sides (<= kEach rows each) and rank numbering
+    // on both ranker sides (<= k rows each)
     "hybrid_rrf" -> 64L, "ranker_agreement" -> 64L, "rbo_overlap" -> 64L,
     // ZipfTopN = 256 post-TakeOrdered numbering
     "zipf_fit" -> 512L,
     // calendar spine: rows = distinct users x span days of the fixture
-    // window (volume changes add events per day, not days)
+    // window (volume changes add events per day, not days) — the
+    // dense-spine moving window IS the operator
     "resample_daily" -> 16384L,
-    // #sources-row supply frame
+    // #sources-row supply frame (fenced): the rank + prefix-sum windows
+    // of the exact water-filling level search — the assign_ids
+    // offsets-table class
     "budget_waterfill" -> 1024L,
-    // #(lang, source)-cells frames
+    // #(lang, source)-cells fenced frame: the largest-remainder rank
+    // window (the budget_waterfill class); eval_sample plans the same
+    // subtree
     "eval_alloc" -> 4096L, "eval_sample" -> 4096L)
 
   /** Count of window specs PARTITIONED on a token/gram-like column — the
@@ -1014,12 +984,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8, "graft-planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan = fn(spark, sfDir).queryExecution
@@ -1029,7 +994,7 @@ object PlanAudit {
       val pushed = "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
         .flatMap(m => m.group(1).split(",").map(_.trim).filter(_.nonEmpty))
         .size
-      val exchanges = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(plan).size
+      val exchanges = exchangeCount(plan)
       val reused = "(?m)^\\(\\d+\\) ReusedExchange".r.findAllIn(plan).size
       val bad = Seq(
         if (plan.contains("CartesianProduct")) "CARTESIAN" else "",

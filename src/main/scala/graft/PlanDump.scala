@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (round 16): dumps `.explain("formatted")` for a
   * comma-separated list of SparkEntry queries to `<outDir>/<name>.txt` —
   * the before/after plan evidence the optimization rounds commit under
@@ -17,14 +15,8 @@ object PlanDump {
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val suffix = args.lift(3).getOrElse("")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.expressions.VectorExpressions.register(spark)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -461,25 +461,13 @@ object CurationStore {
   }
 
   /** Session-cached store over a testdata snapshot — the driver-query
-    * hook: builds once per (application, sfDir) at a temp path (the
-    * [[TextPipeline.warmSharedClusterLabels]] cache recipe) and serves
-    * the read-back manifest.
+    * hook: builds once per (application, sfDir) in a [[SessionCache]]
+    * temp directory and serves the read-back manifest.
     */
-  private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   def manifestFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val path = storeCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      storeCache.keySet.removeIf(_._1 != appId)
-      storeCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-curation-store").toString
-        buildCurationManifest(spark, Tables.documents(spark, sfDir), p)
-        p
-      })
-    }
+    val path = SessionCache.directory(spark, "graft-curation-store", sfDir)(
+      buildCurationManifest(spark, Tables.documents(spark, sfDir), _))
     readManifest(spark, path)
   }
 
@@ -501,20 +489,13 @@ object CurationStore {
     */
   def manifestFromSessionForgetStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val key = sfDir + "#forget"
-    val path = storeCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      storeCache.keySet.removeIf(_._1 != appId)
-      storeCache.computeIfAbsent((appId, key), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-curation-store-forget").toString
-        val corpus = Tables.documents(spark, sfDir)
-        buildCurationManifest(spark, corpus, p)
-        forgetDocs(spark,
-          corpus.filter(pmod(col("doc_id"), lit(13)) === 2)
-            .select(col("doc_id")), p)
-        p
-      })
+    val path = SessionCache.directory(spark, "graft-curation-store-forget",
+        sfDir) { p =>
+      val corpus = Tables.documents(spark, sfDir)
+      buildCurationManifest(spark, corpus, p)
+      forgetDocs(spark,
+        corpus.filter(pmod(col("doc_id"), lit(13)) === 2)
+          .select(col("doc_id")), p)
     }
     readManifest(spark, path)
   }
@@ -529,41 +510,27 @@ object CurationStore {
     */
   def manifestDiffFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val key = sfDir + "#versions"
-    val path = storeCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      storeCache.keySet.removeIf(_._1 != appId)
-      storeCache.computeIfAbsent((appId, key), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-curation-store-versions").toString
-        val corpus = Tables.documents(spark, sfDir)
-        val cut = corpus.agg((max(col("doc_id")).cast("long") / 2)
-          .cast("long")).head.getLong(0)
-        buildCurationManifest(spark, corpus.filter(col("doc_id") < cut), p)
-        applyCurationDelta(spark, corpus.filter(col("doc_id") >= cut), p)
-        p
-      })
+    val path = SessionCache.directory(spark, "graft-curation-store-versions",
+        sfDir) { p =>
+      val corpus = Tables.documents(spark, sfDir)
+      val cut = corpus.agg((max(col("doc_id")).cast("long") / 2)
+        .cast("long")).head.getLong(0)
+      buildCurationManifest(spark, corpus.filter(col("doc_id") < cut), p)
+      applyCurationDelta(spark, corpus.filter(col("doc_id") >= cut), p)
     }
     manifestDiff(spark, path, 1L, 2L)
   }
 
   def manifestFromSessionDeltaStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val key = sfDir + "#delta"
-    val path = storeCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      storeCache.keySet.removeIf(_._1 != appId)
-      storeCache.computeIfAbsent((appId, key), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-curation-store-delta").toString
-        val corpus = Tables.documents(spark, sfDir)
-        val cut = corpus.agg(
-          org.apache.spark.sql.functions.percentile_approx(
-            col("doc_id"), lit(0.5), lit(100))).head.getLong(0)
-        buildCurationManifest(spark, corpus.filter(col("doc_id") < cut), p)
-        applyCurationDelta(spark, corpus.filter(col("doc_id") >= cut), p)
-        p
-      })
+    val path = SessionCache.directory(spark, "graft-curation-store-delta",
+        sfDir) { p =>
+      val corpus = Tables.documents(spark, sfDir)
+      val cut = corpus.agg(
+        org.apache.spark.sql.functions.percentile_approx(
+          col("doc_id"), lit(0.5), lit(100))).head.getLong(0)
+      buildCurationManifest(spark, corpus.filter(col("doc_id") < cut), p)
+      applyCurationDelta(spark, corpus.filter(col("doc_id") >= cut), p)
     }
     readManifest(spark, path)
   }

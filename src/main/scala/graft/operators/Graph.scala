@@ -56,49 +56,16 @@ object Graph {
     * hits consumes the directed (bySrc, byDst) pair. Rebuilding these per
     * query cost ~4× the orders⨝lineitem distinct and 4 redundant
     * exchange-and-sorts per suite run (13.6% of round-7 bench wall); the
-    * cache is the PersistedIndex build-once discipline applied in-session.
+    * [[SessionCache]] entry is the PersistedIndex build-once discipline
+    * applied in-session.
     */
   private final case class EdgeArtifacts(deg: DataFrame, edges: DataFrame,
       pairsBySrc: DataFrame, pairsByDst: DataFrame)
 
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), EdgeArtifacts]
-
-  /** Cache access is a single lock: (a) entries from DEAD applications
-    * are evicted on every lookup, so a long-lived JVM cycling Spark apps
-    * doesn't pin stale checkpointed frames (whose executor blocks are
-    * gone anyway when built via localCheckpoint) for its lifetime; (b)
-    * concurrent FIRST builds serialize, because [[buildEdgeArtifacts]]
-    * toggles the session-global AQE conf around checkpoint capture — two
-    * racing builds could otherwise observe (or restore) each other's
-    * toggle. Post-build lookups are a fast map hit under an uncontended
-    * lock.
-    */
-  private val artifactRddIds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Set[Int]]
-
   private def sharedEdges(spark: SparkSession,
-      sfDir: String): EdgeArtifacts = artifactCache.synchronized {
-    val appId = spark.sparkContext.applicationId
-    artifactCache.keySet.removeIf(_._1 != appId)
-    artifactRddIds.keySet.removeIf(_._1 != appId)
-    val key = (appId, sfDir)
-    if (!artifactCache.containsKey(key)) {
-      // capture the persistent-RDD ids the build registers —
-      // [[releaseSharedEdges]] needs them to free the blocks. Builds
-      // serialize under this lock; the delta additionally assumes no
-      // OTHER thread persists RDDs during the build (true for Bench's
-      // single-threaded sweep and the sequential test harness — a
-      // concurrent foreign localCheckpoint would be mis-attributed and
-      // released, so do NOT call release from a multi-threaded driver)
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val built = buildEdgeArtifacts(spark, sfDir)
-      artifactRddIds.put(key,
-        (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
-      artifactCache.put(key, built)
-    }
-    artifactCache.get(key)
-  }
+      sfDir: String): EdgeArtifacts =
+    SessionCache(spark, "graph-edges", sfDir)(
+      buildEdgeArtifacts(spark, sfDir))
 
   /** Free the shared edge leaves' cached blocks and forget the cache
     * entry — `graft.Bench` calls this once the graph family's timed runs
@@ -108,14 +75,7 @@ object Graph {
     * removed BEFORE the blocks drop, so a later consumer rebuilds from
     * scratch instead of touching a truncated-lineage RDD. */
   def releaseSharedEdges(spark: SparkSession, sfDir: String): Unit =
-    artifactCache.synchronized {
-      val key = (spark.sparkContext.applicationId, sfDir)
-      artifactCache.remove(key)
-      Option(artifactRddIds.remove(key)).foreach(_.foreach { id =>
-        spark.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false))
-      })
-    }
+    SessionCache.release(spark, "graph-edges", sfDir)
 
   /** Membership rule for the driver queries that CONSUME
     * [[sharedEdges]] — every `graph_*` query reads the warm edge

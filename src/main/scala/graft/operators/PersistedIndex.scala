@@ -279,22 +279,11 @@ object PersistedIndex {
       .orderBy("rank")
   }
 
-  private val ivfStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** Build-once IVF session store (the pq/ivfpq/lsh session-store
     * discipline) backing the filtered-probe driver surface. */
   private def sessionIvfStore(spark: SparkSession, sfDir: String): String =
-    ivfStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      ivfStoreCache.keySet.removeIf(_._1 != appId)
-      ivfStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-ivf-store").toString
-        buildIvfIndex(spark, sfDir, p)
-        p
-      })
-    }
+    SessionCache.directory(spark, "graft-ivf-store", sfDir)(
+      buildIvfIndex(spark, sfDir, _))
 
   /** The label used by the `sim_topk_filtered` driver query — ~10% of
     * the corpus at every SF (the 10-label synthetic embedding table). */
@@ -449,9 +438,6 @@ object PersistedIndex {
       .orderBy("rank")
   }
 
-  private val pqStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The store as a driver surface: train + encode the whole snapshot
     * once per (app, sfDir), probe from STORED codes — answers the
     * pq_topk recompute oracle, so the green hash proves
@@ -460,16 +446,8 @@ object PersistedIndex {
     */
   def pqTopKFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val path = pqStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      pqStoreCache.keySet.removeIf(_._1 != appId)
-      pqStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-pq-store").toString
-        buildPqIndex(spark, sfDir, p)
-        p
-      })
-    }
+    val path = SessionCache.directory(spark, "graft-pq-store", sfDir)(
+      buildPqIndex(spark, sfDir, _))
     probePqIndex(spark, path)
   }
 
@@ -649,9 +627,6 @@ object PersistedIndex {
       .orderBy("rank")
   }
 
-  private val ivfPqStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The store as a driver surface: train + persist the whole snapshot
     * once per (app, sfDir), probe from stored centroids + codes —
     * answers the sim_topk_ivfpq recompute oracle, so the green hash
@@ -659,16 +634,8 @@ object PersistedIndex {
     * composite exactly. */
   private def sessionIvfPqStore(spark: SparkSession,
       sfDir: String): String =
-    ivfPqStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      ivfPqStoreCache.keySet.removeIf(_._1 != appId)
-      ivfPqStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-ivfpq-store").toString
-        buildIvfPqIndex(spark, sfDir, p)
-        p
-      })
-    }
+    SessionCache.directory(spark, "graft-ivfpq-store", sfDir)(
+      buildIvfPqIndex(spark, sfDir, _))
 
   def ivfPqTopKFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame =
@@ -1679,9 +1646,6 @@ FROM graft_shingle_bloom_build""")
       .limit(k)
   }
 
-  private val textStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The text index as a driver surface: build on the even ids, fold the
     * odd ids in with [[appendToTextIndex]] (immutable segments + a new
     * manifest version), search — must equal [[Retrieval.bm25TopK]] over
@@ -1698,18 +1662,11 @@ FROM graft_shingle_bloom_build""")
     * the `bm25_store` query serves. */
   private[operators] def sessionTextIndex(spark: SparkSession,
       sfDir: String): String =
-    textStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      textStoreCache.keySet.removeIf(_._1 != appId)
-      textStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-text-store").toString
-        val corpus = graft.sources.Tables.documents(spark, sfDir)
-          .select(col("doc_id"), col("text"))
-        buildTextIndex(spark, corpus.filter(col("doc_id") % 2 === 0), p)
-        appendToTextIndex(spark, corpus.filter(col("doc_id") % 2 === 1), p)
-        p
-      })
+    SessionCache.directory(spark, "graft-text-store", sfDir) { p =>
+      val corpus = graft.sources.Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("text"))
+      buildTextIndex(spark, corpus.filter(col("doc_id") % 2 === 0), p)
+      appendToTextIndex(spark, corpus.filter(col("doc_id") % 2 === 1), p)
     }
 
   // ------------------------------------------------ persisted kNN graph --
@@ -1877,9 +1834,6 @@ FROM graft_shingle_bloom_build""")
   def gcKnnGraphSegments(spark: SparkSession, path: String): Unit =
     StoreVersioning.gcLayout(spark, path, storeLayout("knn"))
 
-  private val knnStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The store as a driver surface: build on the non-delta residue
     * (vec_id % 100 <> 7 — [[SimilarityPipeline.knnGraphDelta]]'s split),
     * fold the delta residue in with [[appendToKnnGraphStore]], read the
@@ -1889,18 +1843,11 @@ FROM graft_shingle_bloom_build""")
     */
   def knnGraphFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val path = knnStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      knnStoreCache.keySet.removeIf(_._1 != appId)
-      knnStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-knn-store").toString
-        val e = graft.sources.Tables.embeddings(spark, sfDir)
-        val isDelta = pmod(col("vec_id"), lit(100)) === 7
-        buildKnnGraphStore(spark, e.filter(!isDelta), p)
-        appendToKnnGraphStore(spark, e.filter(isDelta), p)
-        p
-      })
+    val path = SessionCache.directory(spark, "graft-knn-store", sfDir) { p =>
+      val e = graft.sources.Tables.embeddings(spark, sfDir)
+      val isDelta = pmod(col("vec_id"), lit(100)) === 7
+      buildKnnGraphStore(spark, e.filter(!isDelta), p)
+      appendToKnnGraphStore(spark, e.filter(isDelta), p)
     }
     readKnnGraphStore(spark, path)
   }
@@ -2331,9 +2278,6 @@ FROM graft_shingle_bloom_build""")
       .orderBy("q_id", "rank")
   }
 
-  private val lshStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The store as a driver surface: build on the non-delta residue
     * (vec_id % 100 <> 77 — chosen so the 16 normal vectors and the
     * query vector stay in the base build), fold the delta residue in
@@ -2344,18 +2288,11 @@ FROM graft_shingle_bloom_build""")
     * (app, sfDir).
     */
   private def sessionLshStore(spark: SparkSession, sfDir: String): String =
-    lshStoreCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      lshStoreCache.keySet.removeIf(_._1 != appId)
-      lshStoreCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-lsh-store").toString
-        val e = graft.sources.Tables.embeddings(spark, sfDir)
-        val isDelta = pmod(col("vec_id"), lit(100)) === 77
-        buildLshIndex(spark, e.filter(!isDelta), p)
-        appendToLshIndex(spark, e.filter(isDelta), p)
-        p
-      })
+    SessionCache.directory(spark, "graft-lsh-store", sfDir) { p =>
+      val e = graft.sources.Tables.embeddings(spark, sfDir)
+      val isDelta = pmod(col("vec_id"), lit(100)) === 77
+      buildLshIndex(spark, e.filter(!isDelta), p)
+      appendToLshIndex(spark, e.filter(isDelta), p)
     }
 
   def lshTopKFromSessionStore(spark: SparkSession,

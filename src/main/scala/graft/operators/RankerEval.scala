@@ -604,38 +604,29 @@ ORDER BY ranker, query_id"""
       .orderBy("component", "metric")
   }
 
-  private val driftCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The drift gate as a driver surface: release 1 is the true TF-IDF
     * panel scorecard, release 2 the DEGRADED (score-ascending) ranking
     * published under the same component names — the synthetic
     * regression the gate exists to flag. Cached per (app, sfDir). */
   def driftFromSessionStore(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val p = driftCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      driftCache.keySet.removeIf(_._1 != appId)
-      driftCache.computeIfAbsent((appId, sfDir), _ => {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-scorecard-store").toString
-        val corpus = Tables.documents(spark, sfDir)
-        val qrels = qrelsFrom(spark, corpus, QueryPanel)
-        val truth = Retrieval
-          .indexTopKBatchFrom(spark, corpus, QueryPanel, EvalK)
-          .select(lit("tfidf").as("ranker"), col("query_id"), col("rank"),
-            col("doc_id"))
-        appendScorecard(spark,
-          scorecardLong(scoreRankings(truth, qrels, EvalK)), path)
-        // the degraded release publishes under the SAME component name —
-        // it models the same ranker regressing between releases
-        val degraded = degradedRanking(spark, corpus, QueryPanel, EvalK)
-          .select(lit("tfidf").as("ranker"), col("query_id"), col("rank"),
-            col("doc_id"))
-        appendScorecard(spark,
-          scorecardLong(scoreRankings(degraded, qrels, EvalK)), path)
-        path
-      })
+    val p = SessionCache.directory(spark, "graft-scorecard-store",
+        sfDir) { path =>
+      val corpus = Tables.documents(spark, sfDir)
+      val qrels = qrelsFrom(spark, corpus, QueryPanel)
+      val truth = Retrieval
+        .indexTopKBatchFrom(spark, corpus, QueryPanel, EvalK)
+        .select(lit("tfidf").as("ranker"), col("query_id"), col("rank"),
+          col("doc_id"))
+      appendScorecard(spark,
+        scorecardLong(scoreRankings(truth, qrels, EvalK)), path)
+      // the degraded release publishes under the SAME component name —
+      // it models the same ranker regressing between releases
+      val degraded = degradedRanking(spark, corpus, QueryPanel, EvalK)
+        .select(lit("tfidf").as("ranker"), col("query_id"), col("rank"),
+          col("doc_id"))
+      appendScorecard(spark,
+        scorecardLong(scoreRankings(degraded, qrels, EvalK)), path)
     }
     scorecardDrift(spark, p)
   }

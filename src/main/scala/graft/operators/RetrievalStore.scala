@@ -487,9 +487,6 @@ object RetrievalStore {
       .select(col("chunk_id"), cosV.as("cosv"))
   }
 
-  private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   /** The store as a driver surface: build on the non-delta residue
     * (doc_id % 100 <> 77 — the lsh_store discipline; the seed chunks
     * come from the lowest doc_ids, which stay in the base build), fold
@@ -500,42 +497,35 @@ object RetrievalStore {
     */
   private[operators] def sessionStore(spark: SparkSession,
       sfDir: String): String =
-    storeCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      storeCache.keySet.removeIf(_._1 != appId)
-      storeCache.computeIfAbsent((appId, sfDir), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-retrieval-store").toString
-        val d = graft.sources.Tables.documents(spark, sfDir)
-        val isDelta = pmod(col("doc_id"), lit(100)) === 77
-        buildRetrievalStore(spark, d.filter(!isDelta), p)
-        // the build-on-residue + append-delta == whole-corpus-program
-        // equality relies on the base build's frozen seeds BEING the
-        // full corpus's first-NSeeds chunks — true iff every seed doc
-        // sorts below the first delta doc. Assert it LOUDLY at build
-        // time (round-15 ADVICE: raising NSeeds or changing the delta
-        // residue would otherwise break the retrieval_store oracle far
-        // from the cause). Both sides are 1-row driver reads.
-        val maxSeedDoc = spark.read.parquet(s"$p/seedmeta")
-          .agg(max(floor(col("chunk_id") / IdBase).cast(LongType)))
-          .head.getLong(0)
-        val minRow = d.filter(isDelta).agg(min(col("doc_id"))).head
-        // an empty delta residue (corpus without a doc ≡ 77 mod 100)
-        // yields a NULL min — there is nothing to append and the
-        // invariant holds trivially; reading getLong would NPE instead
-        // of reaching the loud message below (round-15 review finding)
-        if (!minRow.isNullAt(0)) {
-          val minDeltaDoc = minRow.getLong(0)
-          require(minDeltaDoc > maxSeedDoc,
-            s"retrieval session store: delta residue starts at doc " +
-              s"$minDeltaDoc but the frozen seeds reach doc $maxSeedDoc — " +
-              "the base build's seeds would differ from the full-corpus " +
-              "program's and the chain oracle would break; pick a delta " +
-              "residue above the seed docs or lower NSeeds")
-          appendToRetrievalStore(spark, d.filter(isDelta), p)
-        }
-        p
-      })
+    SessionCache.directory(spark, "graft-retrieval-store", sfDir) { p =>
+      val d = graft.sources.Tables.documents(spark, sfDir)
+      val isDelta = pmod(col("doc_id"), lit(100)) === 77
+      buildRetrievalStore(spark, d.filter(!isDelta), p)
+      // the build-on-residue + append-delta == whole-corpus-program
+      // equality relies on the base build's frozen seeds BEING the
+      // full corpus's first-NSeeds chunks — true iff every seed doc
+      // sorts below the first delta doc. Assert it LOUDLY at build
+      // time (round-15 ADVICE: raising NSeeds or changing the delta
+      // residue would otherwise break the retrieval_store oracle far
+      // from the cause). Both sides are 1-row driver reads.
+      val maxSeedDoc = spark.read.parquet(s"$p/seedmeta")
+        .agg(max(floor(col("chunk_id") / IdBase).cast(LongType)))
+        .head.getLong(0)
+      val minRow = d.filter(isDelta).agg(min(col("doc_id"))).head
+      // an empty delta residue (corpus without a doc ≡ 77 mod 100)
+      // yields a NULL min — there is nothing to append and the
+      // invariant holds trivially; reading getLong would NPE instead
+      // of reaching the loud message below (round-15 review finding)
+      if (!minRow.isNullAt(0)) {
+        val minDeltaDoc = minRow.getLong(0)
+        require(minDeltaDoc > maxSeedDoc,
+          s"retrieval session store: delta residue starts at doc " +
+            s"$minDeltaDoc but the frozen seeds reach doc $maxSeedDoc — " +
+            "the base build's seeds would differ from the full-corpus " +
+            "program's and the chain oracle would break; pick a delta " +
+            "residue above the seed docs or lower NSeeds")
+        appendToRetrievalStore(spark, d.filter(isDelta), p)
+      }
     }
 
 

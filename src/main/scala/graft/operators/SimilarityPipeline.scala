@@ -2278,51 +2278,25 @@ FROM g ORDER BY label"""
     * `knn_edge_build` line so no query's number silently absorbs or
     * escapes the one-time cost.
     */
-  private val mutualEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]
-
-  private val mutualEdgeRddIds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Set[Int]]
-
   private def mutualKnnEdges(spark: SparkSession,
-      sfDir: String): DataFrame = mutualEdgeCache.synchronized {
-    val appId = spark.sparkContext.applicationId
-    mutualEdgeCache.keySet.removeIf(_._1 != appId)
-    mutualEdgeRddIds.keySet.removeIf(_._1 != appId)
-    val key = (appId, sfDir)
-    if (!mutualEdgeCache.containsKey(key)) {
-      // capture the build's persistent-RDD ids so
-      // [[releaseMutualKnnEdges]] can free the blocks (also catches the
-      // intermediate kNN checkpoint below) — same single-threaded-driver
-      // attribution assumption as [[Graph.sharedEdges]]
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+      sfDir: String): DataFrame =
+    SessionCache(spark, "mutual-knn-edges", sfDir) {
+      // the release also frees the intermediate kNN checkpoint below
       val d = knnGraph(spark, sfDir).select(col("vec_id").as("a"),
         col("nbr_id").as("b")).transform(Fence)
-      val built = d.as("f").join(d.as("g"),
+      d.as("f").join(d.as("g"),
           col("f.a") === col("g.b") && col("f.b") === col("g.a"))
         .filter(col("f.a") < col("f.b"))
         .select(col("f.a").as("u"), col("f.b").as("v"))
         .transform(Fence)
-      mutualEdgeRddIds.put(key,
-        (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
-      mutualEdgeCache.put(key, built)
     }
-    mutualEdgeCache.get(key)
-  }
 
   /** Free the shared mutual-kNN edge leaf's cached blocks and forget the
     * cache entry — the [[Graph.releaseSharedEdges]] discipline for the
     * kNN family; entry removal precedes the block drop, so a later
     * consumer rebuilds instead of reading a truncated lineage. */
   def releaseMutualKnnEdges(spark: SparkSession, sfDir: String): Unit =
-    mutualEdgeCache.synchronized {
-      val key = (spark.sparkContext.applicationId, sfDir)
-      mutualEdgeCache.remove(key)
-      Option(mutualEdgeRddIds.remove(key)).foreach(_.foreach { id =>
-        spark.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false))
-      })
-    }
+    SessionCache.release(spark, "mutual-knn-edges", sfDir)
 
   /** The driver queries that CONSUME [[mutualKnnEdges]] — the registry
     * `graft.Bench` groups into the kNN family (warm, run consecutively,

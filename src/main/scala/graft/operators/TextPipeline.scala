@@ -1549,52 +1549,23 @@ FROM agg, tot ORDER BY n_bands DESC"""
     * shingle→minhash→band→verify→CC chain from scratch (4.18 s + 2.68 s
     * at sf0.1 in round 9). The cached frame is the CC output fenced
     * behind a checkpoint leaf, node-sized (near-dup docs only, a small
-    * fraction of the corpus). Entries from dead applications evict on
-    * every lookup; concurrent first builds serialize under the lock (the
-    * CC loop runs driver-side convergence probes that should not
-    * interleave).
+    * fraction of the corpus). A [[SessionCache]] entry: concurrent first
+    * builds serialize under its lock (the CC loop runs driver-side
+    * convergence probes that should not interleave).
     */
-  private val clusterLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]
-
-  private val clusterLabelRddIds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Set[Int]]
-
   private def sharedClusterLabels(spark: SparkSession,
-      sfDir: String): DataFrame = clusterLabelCache.synchronized {
-    val appId = spark.sparkContext.applicationId
-    clusterLabelCache.keySet.removeIf(_._1 != appId)
-    clusterLabelRddIds.keySet.removeIf(_._1 != appId)
-    val key = (appId, sfDir)
-    if (!clusterLabelCache.containsKey(key)) {
-      // capture the build's persistent-RDD ids so
-      // [[releaseSharedClusterLabels]] can free the blocks — same
-      // single-threaded-driver attribution assumption as
-      // [[Graph.sharedEdges]]
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val built = Fence(connectedComponents(
+      sfDir: String): DataFrame =
+    SessionCache(spark, "dedup-cluster-labels", sfDir)(
+      Fence(connectedComponents(
         dedupMinHash(spark, sfDir).select(col("doc_a"), col("doc_b")),
-        DefaultCcIters))
-      clusterLabelRddIds.put(key,
-        (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
-      clusterLabelCache.put(key, built)
-    }
-    clusterLabelCache.get(key)
-  }
+        DefaultCcIters)))
 
   /** Free the shared cluster-label leaf's cached blocks and forget the
     * cache entry — the [[Graph.releaseSharedEdges]] discipline for the
     * dedup-cluster family; entry removal precedes the block drop, so a
     * later consumer rebuilds instead of reading a truncated lineage. */
   def releaseSharedClusterLabels(spark: SparkSession, sfDir: String): Unit =
-    clusterLabelCache.synchronized {
-      val key = (spark.sparkContext.applicationId, sfDir)
-      clusterLabelCache.remove(key)
-      Option(clusterLabelRddIds.remove(key)).foreach(_.foreach { id =>
-        spark.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false))
-      })
-    }
+    SessionCache.release(spark, "dedup-cluster-labels", sfDir)
 
   /** The driver queries that CONSUME [[sharedClusterLabels]] — the
     * registry `graft.Bench` groups into the dedup family (warm the

@@ -187,21 +187,11 @@ object TextInterchange {
 
   // ------------------------------------------------------------ driver --
 
-  private val rtCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
   private def cachedDir(spark: SparkSession, sfDir: String, kind: String)
       (write: (DataFrame, String) => Unit): String =
-    rtCache.synchronized {
-      val appId = spark.sparkContext.applicationId
-      rtCache.keySet.removeIf(_._1 != appId)
-      rtCache.computeIfAbsent((appId, s"$sfDir#$kind"), _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft-interchange-$kind").toString
-        write(Tables.documents(spark, sfDir), p)
-        p
-      })
-    }
+    graft.operators.SessionCache.directory(spark,
+      s"graft-interchange-$kind", sfDir)(
+      write(Tables.documents(spark, sfDir), _))
 
   /** Per-source corpus profile computed AFTER a full parquet → format →
     * typed-read round trip; equality with the oracle (which reads the

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -12,10 +13,16 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val plans: Map[String, String] =
+  // each query is built ONCE (its eager fences and training run once):
+  // the formatted plan and the output schema come from the same frame
+  private lazy val built: Map[String, (String, StructType)] =
     SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sf).queryExecution.explainString(FormattedMode)
+      val df = fn(spark, sf)
+      name -> ((df.queryExecution.explainString(FormattedMode), df.schema))
     }
+
+  private lazy val plans: Map[String, String] =
+    built.map { case (name, (plan, _)) => name -> plan }
 
   private def exchanges(plan: String): Int = PlanAudit.exchangeCount(plan)
 
@@ -44,7 +51,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // frames (post-limit reranks, #shards-row offset tables, #bins sketch
     // estimates) so the next top-k variant can't silently ship one
     plans.foreach { case (name, p) =>
-      if (!PlanAudit.unpartitionedWindowWhitelist.contains(name))
+      if (!PlanAudit.unpartitionedWindowBounds.contains(name))
         withClue(s"$name: ") {
           PlanAudit.unpartitionedWindowCount(p) shouldBe 0
         }
@@ -53,14 +60,14 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   test("whitelists carry no stale rows for removed queries") {
     val queries = SparkEntry.queries.keySet
-    (PlanAudit.unpartitionedWindowWhitelist -- queries) shouldBe empty
+    (PlanAudit.unpartitionedWindowBounds.keySet -- queries) shouldBe empty
     (PlanAudit.bnljWhitelist -- queries) shouldBe empty
     (PlanAudit.tokenWindowWhitelist -- queries) shouldBe empty
     (PlanAudit.stratumWindowWhitelist.keySet -- queries) shouldBe empty
   }
 
   test("whitelisted partition-less windows execute over bounded inputs") {
-    // round 16 (VERDICT r15 #8): the whitelist's comments CLAIM each
+    // round 16 (VERDICT r15 #8): the bounds map's comments CLAIM each
     // partition-less window numbers a bounded post-limit/offsets frame;
     // this test PROVES it — run each whitelisted query and assert every
     // partition-less WindowExec's measured row count (numOutputRows ==
@@ -72,8 +79,6 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    PlanAudit.unpartitionedWindowBounds.keySet shouldBe
-      PlanAudit.unpartitionedWindowWhitelist
     def allNodes(p: SparkPlan): Seq[SparkPlan] = {
       val self = p match {
         case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
@@ -150,10 +155,10 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // unhashable and crash it (CORRECTNESS_r06 inverted_index); library
     // callers get array forms via the *From builders, driver entries must
     // serialize (the embQuantizeFlat / invertedIndexFlat discipline)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val bad = fn(spark, sf).schema.fields.filter(f =>
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+    built.foreach { case (name, (_, schema)) =>
+      val bad = schema.fields.filter(f =>
+        f.dataType.isInstanceOf[ArrayType] ||
+        f.dataType.isInstanceOf[MapType])
       withClue(s"$name: ${bad.map(_.name).mkString(",")} ") {
         bad shouldBe empty
       }
