@@ -12,8 +12,8 @@ import graft.sources.Tables
 /** Batch twins of the health-check pipeline operators (SURVEY.md §2) over the
   * driver's `events` table, used by the DuckDB-oracle correctness gate.
   *
-  * Each method is the Spark side of a `SparkEntry.queries` entry; the matching
-  * oracle SQL lives in [[graft.SparkEntry.oracleSql]]. All queries end in a
+  * Each method is the Spark side of a [[graft.QuerySpec]] in `SparkEntry.specs`,
+  * which also holds the matching oracle SQL. All queries end in a
   * deterministic total ORDER BY so row order matches the oracle exactly.
   *
   * Scale notes: every query here is a scan -> projection/agg pipeline whose

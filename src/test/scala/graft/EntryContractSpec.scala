@@ -2,36 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the driver contract: every declared query has exactly one oracle,
-  * and the `oracleSql` source never re-accumulates duplicate key literals
-  * (round 2 shipped ~450 dead lines of repeated map entries — Scala `Map`
-  * keeps the last binding, so duplicates are silent).
+/** Guards the driver contract: query names are unique, the native function
+  * registries agree, and every oracle reads only driver-provided tables.
   */
 class EntryContractSpec extends AnyFunSuite {
 
-  /** Queries with no ANSI-SQL-expressible oracle. Empty since round 7:
-    * `bpe_merges` (the last exemption) now has a generated unrolled-CTE
-    * DuckDB replay ([[graft.operators.BpeTrainer.bpeOracleSql]], the
-    * Graph.pagerankOracleSql pattern).
-    */
-  private val oracleExempt = Set.empty[String]
-
-  test("every query has an oracle and every oracle has a query") {
-    assert(SparkEntry.oracleSql.keySet ===
-      SparkEntry.queries.keySet -- oracleExempt)
-  }
-
-  test("no duplicate oracleSql key literals in the source text") {
-    val text = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val body = text.substring(text.indexOf("def oracleSql"))
-    val keyLiteral = """    "([a-z0-9_]+)" ->""".r
-    val keys = keyLiteral.findAllMatchIn(body).map(_.group(1)).toSeq
-    val dups = keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-    assert(dups.isEmpty, s"duplicated oracleSql keys: ${dups.mkString(", ")}")
-    assert(keys.size === SparkEntry.oracleSql.size)
+  test("every spec name is distinct") {
+    assert(SparkEntry.specs.map(_.name).distinct.size === SparkEntry.specs.size)
   }
 
   test("session registry and GraftExtensions register the same native functions") {
@@ -58,15 +35,15 @@ class EntryContractSpec extends AnyFunSuite {
     // \b so a column ending in `_from` before a line break doesn't make
     // the NEXT keyword's text parse as a relation named "from"
     val fromRe = """(?i)\b(?:FROM|JOIN)\s+([a-z_][a-z0-9_]*)""".r
-    SparkEntry.oracleSql.foreach { case (name, sql) =>
-      val refs = fromRe.findAllMatchIn(sql).map(_.group(1).toLowerCase).toSet
+    SparkEntry.specs.foreach { q =>
+      val refs = fromRe.findAllMatchIn(q.oracleSql).map(_.group(1).toLowerCase).toSet
       val cteNames = """(?i)([a-z_][a-z0-9_]*)\s+AS\s*(?:MATERIALIZED\s*)?\(""".r
-        .findAllMatchIn(sql).map(_.group(1).toLowerCase).toSet
+        .findAllMatchIn(q.oracleSql).map(_.group(1).toLowerCase).toSet
       val unknown = refs -- tables -- cteNames
       assert(unknown.isEmpty,
-        s"$name references unknown relations: ${unknown.mkString(", ")}")
+        s"${q.name} references unknown relations: ${unknown.mkString(", ")}")
       assert(refs.intersect(tables).nonEmpty || cteNames.nonEmpty,
-        s"$name references no known table")
+        s"${q.name} references no known table")
     }
   }
 }

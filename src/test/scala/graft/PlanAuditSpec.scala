@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -14,15 +17,18 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   // each query is built ONCE (its eager fences and training run once):
-  // the formatted plan and the output schema come from the same frame
-  private lazy val built: Map[String, (String, StructType)] =
-    SparkEntry.queries.map { case (name, fn) =>
-      val df = fn(spark, sf)
-      name -> ((df.queryExecution.explainString(FormattedMode), df.schema))
-    }
+  // the formatted plan and the output schema come from the same frame, and
+  // the frames of queries that declare partition-less windows are kept to
+  // execute
+  private lazy val built: Map[String, (String, StructType, Option[DataFrame])] =
+    SparkEntry.specs.map { q =>
+      val df = q.run(spark, sf)
+      q.name -> ((df.queryExecution.explainString(FormattedMode), df.schema,
+        q.unpartitionedWindowRows.map(_ => df)))
+    }.toMap
 
   private lazy val plans: Map[String, String] =
-    built.map { case (name, (plan, _)) => name -> plan }
+    built.map { case (name, (plan, _, _)) => name -> plan }
 
   private def exchanges(plan: String): Int = PlanAudit.exchangeCount(plan)
 
@@ -31,6 +37,40 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
   private val LiveWindowQueriesFloor = 28
   private val LiveWindowsFloor = 32
 
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val self = p match {
+      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+      case q: QueryStageExec => q +: allNodes(q.plan)
+      case _ => p +: p.children.flatMap(allNodes)
+    }
+    self ++ p.subqueries.flatMap(allNodes)
+  }
+
+  /** Runs `df`, then asserts that every partition-less window in its
+    * executed plan emits at most `cap` rows (a window emits one row per
+    * input row); returns each window's measured row count. WindowExec
+    * keeps no row metric, so each window is re-run over its already
+    * materialized inputs and its output counted.
+    */
+  private def assertWindowsWithin(name: String, df: DataFrame,
+      cap: Long): Seq[Long] = {
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    if (root.isInstanceOf[AdaptiveSparkPlanExec])
+      withClue(s"$name: ") { root.toString should include("isFinalPlan=true") }
+    val windows = allNodes(root).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    windows.map { w =>
+      val rows = w.execute().count()
+      withClue(s"$name: window ${w.simpleStringWithNodeId()} " +
+        s"measured rows=$rows vs documented ceiling $cap: ") {
+        rows should be <= cap
+      }
+      rows
+    }
+  }
+
   test("no query plans a cartesian product") {
     plans.foreach { case (name, p) =>
       withClue(s"$name: ") { p should not include "CartesianProduct" }
@@ -38,10 +78,11 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
   }
 
   test("broadcast nested-loop joins only where the build side is a 1-row broadcast") {
-    // the whitelist lives on PlanAudit so the dev dump and this gate agree
-    plans.foreach { case (name, p) =>
-      if (!PlanAudit.bnljWhitelist.contains(name))
-        withClue(s"$name: ") { p should not include "BroadcastNestedLoopJoin" }
+    // QuerySpec.bnlj marks them, so the dev dump and this gate agree
+    SparkEntry.specs.filterNot(_.bnlj).foreach { q =>
+      withClue(s"${q.name}: ") {
+        plans(q.name) should not include "BroadcastNestedLoopJoin"
+      }
     }
   }
 
@@ -50,73 +91,52 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // global sort at 100 TB; the whitelist pins today's documented bounded
     // frames (post-limit reranks, #shards-row offset tables, #bins sketch
     // estimates) so the next top-k variant can't silently ship one
-    plans.foreach { case (name, p) =>
-      if (!PlanAudit.unpartitionedWindowBounds.contains(name))
-        withClue(s"$name: ") {
-          PlanAudit.unpartitionedWindowCount(p) shouldBe 0
-        }
+    SparkEntry.specs.filter(_.unpartitionedWindowRows.isEmpty).foreach { q =>
+      withClue(s"${q.name}: ") {
+        PlanAudit.unpartitionedWindowCount(plans(q.name)) shouldBe 0
+      }
     }
-  }
-
-  test("whitelists carry no stale rows for removed queries") {
-    val queries = SparkEntry.queries.keySet
-    (PlanAudit.unpartitionedWindowBounds.keySet -- queries) shouldBe empty
-    (PlanAudit.bnljWhitelist -- queries) shouldBe empty
-    (PlanAudit.tokenWindowWhitelist -- queries) shouldBe empty
-    (PlanAudit.stratumWindowWhitelist.keySet -- queries) shouldBe empty
   }
 
   test("whitelisted partition-less windows execute over bounded inputs") {
-    // round 16 (VERDICT r15 #8): the bounds map's comments CLAIM each
-    // partition-less window numbers a bounded post-limit/offsets frame;
-    // this test PROVES it — run each whitelisted query and assert every
-    // partition-less WindowExec's measured row count (numOutputRows ==
-    // its input rows: a window emits one row per input row) stays under
-    // the documented volume-independent ceiling in
-    // PlanAudit.unpartitionedWindowBounds. A window that silently grew
-    // corpus-sized fails here long before it becomes a single-task
-    // global sort at 100 TB.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.window.WindowExec
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match {
-        case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-        case q: QueryStageExec => q +: allNodes(q.plan)
-        case _ => p +: p.children.flatMap(allNodes)
+    // each declared unpartitionedWindowRows CLAIMS its partition-less
+    // windows number a bounded post-limit/offsets frame; this test PROVES
+    // it — execute each declaring query's frame and measure every
+    // partition-less window against the documented volume-independent
+    // ceiling. A window that silently grew corpus-sized fails here long
+    // before it becomes a single-task global sort at 100 TB. Queries that
+    // FENCE their post-window frame (localCheckpoint at construction)
+    // execute the window before the final plan exists — those windows are
+    // bounded by the same post-limit constants and invisible here; the
+    // check covers every partition-less window that executes in the live
+    // plan, which is exactly the class that could silently grow
+    // corpus-sized.
+    val observed = SparkEntry.specs.sortBy(_.name).flatMap { q =>
+      q.unpartitionedWindowRows.map { cap =>
+        q.name -> assertWindowsWithin(q.name, built(q.name)._3.get, cap)
       }
-      self ++ p.subqueries.flatMap(allNodes)
-    }
-    val observed = PlanAudit.unpartitionedWindowBounds.toSeq.sortBy(_._1).map {
-      case (name, cap) =>
-        val df = SparkEntry.queries(name)(spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-        val windows = allNodes(df.queryExecution.executedPlan).collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        // queries that FENCE their post-window frame (localCheckpoint at
-        // construction) execute the window before the final plan exists —
-        // those windows are bounded by the same post-limit constants and
-        // invisible here; the assertion covers every partition-less
-        // window that executes in the live plan, which is exactly the
-        // class that could silently grow corpus-sized
-        windows.foreach { w =>
-          val rows = w.metrics.get("numOutputRows").map(_.value)
-          withClue(s"$name: window ${w.simpleStringWithNodeId()} " +
-            s"measured rows=$rows vs documented ceiling $cap: ") {
-            rows.foreach(_ should be <= cap)
-          }
-        }
-        name -> windows.size
     }
     // a window moved behind a fence drops out of the loop above silently:
     // the live windows this run checked must not fall below today's count
-    val live = observed.filter(_._2 > 0)
-    info(s"live partition-less windows: ${live.map(_._2).sum} in " +
-      s"${live.size} of ${observed.size} whitelisted queries: " +
-      live.map { case (n, c) => s"$n=$c" }.mkString(", "))
+    val live = observed.filter(_._2.nonEmpty)
+    info(s"live partition-less windows: ${live.map(_._2.size).sum} in " +
+      s"${live.size} of ${observed.size} whitelisted queries, measured rows: " +
+      live.map { case (n, rows) => s"$n=${rows.mkString("/")}" }.mkString(", "))
     live.size should be >= LiveWindowQueriesFloor
-    live.map(_._2).sum should be >= LiveWindowsFloor
+    live.map(_._2.size).sum should be >= LiveWindowsFloor
+  }
+
+  test("the bounded-window check fails a window over more rows than its ceiling") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    import org.scalatest.exceptions.TestFailedException
+    def numbered = spark.range(100).toDF("id")
+      .withColumn("rk", row_number().over(Window.orderBy("id")))
+    assertWindowsWithin("probe", numbered, 100L) shouldBe Seq(100L)
+    val e = intercept[TestFailedException] {
+      assertWindowsWithin("probe", numbered, 99L)
+    }
+    e.getMessage should include("measured rows=100")
   }
 
   test("no non-whitelisted query plans a stratum-keyed sort window") {
@@ -126,12 +146,11 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // task at 10^9 docs. The two-level machinery's offsets-table windows
     // (order col `_rb`/`shard`) are excluded by the counter itself; every
     // other stratum-alone sort window must carry a documented volume-
-    // independent bound in PlanAudit.stratumWindowWhitelist.
-    plans.foreach { case (name, p) =>
-      if (!PlanAudit.stratumWindowWhitelist.contains(name))
-        withClue(s"$name: ") {
-          PlanAudit.stratumKeyedSortWindowCount(p) shouldBe 0
-        }
+    // independent bound in its QuerySpec.stratumWindow.
+    SparkEntry.specs.filter(_.stratumWindow.isEmpty).foreach { q =>
+      withClue(s"${q.name}: ") {
+        PlanAudit.stratumKeyedSortWindowCount(plans(q.name)) shouldBe 0
+      }
     }
   }
 
@@ -142,11 +161,10 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // AQE-splittable) — the scale-safe form is a keyed agg joined back;
     // only inverted_index's provably-bounded (<= NShards rows/term)
     // postings window is allowed
-    plans.foreach { case (name, p) =>
-      if (!PlanAudit.tokenWindowWhitelist.contains(name))
-        withClue(s"$name: ") {
-          PlanAudit.tokenKeyedWindowCount(p) shouldBe 0
-        }
+    SparkEntry.specs.filterNot(_.tokenWindow).foreach { q =>
+      withClue(s"${q.name}: ") {
+        PlanAudit.tokenKeyedWindowCount(plans(q.name)) shouldBe 0
+      }
     }
   }
 
@@ -155,7 +173,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // unhashable and crash it (CORRECTNESS_r06 inverted_index); library
     // callers get array forms via the *From builders, driver entries must
     // serialize (the embQuantizeFlat / invertedIndexFlat discipline)
-    built.foreach { case (name, (_, schema)) =>
+    built.foreach { case (name, (_, schema, _)) =>
       val bad = schema.fields.filter(f =>
         f.dataType.isInstanceOf[ArrayType] ||
         f.dataType.isInstanceOf[MapType])
@@ -192,26 +210,14 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
   }
 
   test("exchange ceilings hold for the dedup/similarity/fingerprint family") {
-    // the per-query budget lives in PlanAudit.exchangeCeilings — ONE source
-    // shared with Bench's plan telemetry and the dev dump, so a regression
+    // every query's budget is its QuerySpec.maxExchanges, so a regression
     // that re-introduces a fence shuffle (text_fingerprint), a regroup
     // inflation (emb_neardup), or an extra join shuffle fails here AND shows
     // in the BENCH_r{N} exchange counts
-    PlanAudit.exchangeCeilings.foreach { case (name, ceiling) =>
-      withClue(s"$name: ") { exchanges(plans(name)) should be <= ceiling }
-    }
-  }
-
-  test("every driver query declares an exchange ceiling") {
-    // completeness of the budget table: a new query cannot land without
-    // pinning its plan shape (and a removed query cannot leave a stale row)
-    val queries = SparkEntry.queries.keySet
-    val budgeted = PlanAudit.exchangeCeilings.keySet
-    withClue("queries without a ceiling: ") {
-      (queries -- budgeted) shouldBe empty
-    }
-    withClue("stale ceiling rows: ") {
-      (budgeted -- queries) shouldBe empty
+    SparkEntry.specs.foreach { q =>
+      withClue(s"${q.name}: ") {
+        exchanges(plans(q.name)) should be <= q.maxExchanges
+      }
     }
   }
 

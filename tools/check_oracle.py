@@ -7,9 +7,10 @@ Reads each <verifyOutDir>/<name>/ parquet (Spark result) and runs
 <verifyOutDir>/oracle_sql.json[name] in DuckDB with every testdata table
 registered as a view. Compares column names (sorted), row counts, and a
 hash of all values (rows in result order AND row-sorted, so we catch both
-kinds of mismatch).
+kinds of mismatch). Each PASS/FAIL line ends with the seconds DuckDB spent on
+that query's oracle (both executions, and any low-memory retries).
 """
-import sys, os, json, hashlib
+import sys, os, json, hashlib, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -38,6 +39,12 @@ def table_digest(cols, rows):
     return h_ordered, h_sorted, lines
 
 
+def oracle_secs(t0):
+    if t0 is None:  # failed before the oracle ran
+        return ""
+    return f"[oracle {time.perf_counter() - t0:.2f} s]"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
@@ -62,6 +69,7 @@ def main():
             print(f"FAIL {name}: no spark output dir")
             n_fail += 1
             continue
+        t0 = None
         try:
             s = con.execute(
                 f"SELECT * FROM read_parquet('{spark_path}/*.parquet')")
@@ -73,18 +81,21 @@ def main():
             # — hash-red at the driver, INVISIBLE to this script's
             # fetchall() (HUGEINT -> Python int). The six-round
             # curation_program red. Check the arrow schema explicitly.
+            t0 = time.perf_counter()
             o_arrow = con.execute(oracle[name]).arrow()
             import pyarrow.types as pt
             decs = [f.name for f in o_arrow.schema if pt.is_decimal(f.type)]
             if decs:
                 print(f"FAIL {name}: oracle emits decimal/HUGEINT column(s) "
                       f"{decs} — CAST(... AS BIGINT) in the oracle SQL "
-                      f"(driver hash-red even when values match)")
+                      f"(driver hash-red even when values match) "
+                      f"{oracle_secs(t0)}")
                 n_fail += 1
                 continue
             o = con.execute(oracle[name])
             o_cols = [d[0] for d in o.description]
             o_rows = o.fetchall()
+            o_secs = oracle_secs(t0)
         except Exception as e:
             # DuckDB join/agg operator state scales with thread count;
             # the heaviest oracles (knn_triangles' cluster-blocked
@@ -100,7 +111,7 @@ def main():
             is_mem = isinstance(e, MemoryError) or \
                 any(m in str(e) for m in mem_markers)
             if not is_mem:
-                print(f"FAIL {name}: exec error: {e}")
+                print(f"FAIL {name}: exec error: {e} {oracle_secs(t0)}")
                 n_fail += 1
                 continue
             # escalating retry ladder: some operator state is PINNED
@@ -136,9 +147,10 @@ def main():
                         con2.close()
                 if retried:
                     break
+            o_secs = oracle_secs(t0)
             if not retried:
                 print(f"FAIL {name}: exec error (after low-memory "
-                      f"retries): {last_err}")
+                      f"retries): {last_err} {o_secs}")
                 n_fail += 1
                 continue
         problems = []
@@ -157,10 +169,11 @@ def main():
                         problems.append(f"  first diff row {i}:\n   spark : {a[:300]}\n   oracle: {b[:300]}")
                         break
         if problems:
-            print(f"FAIL {name}: " + "; ".join(p for p in problems))
+            print(f"FAIL {name}: " + "; ".join(p for p in problems) +
+                  f" {o_secs}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(s_rows)} rows)")
+            print(f"PASS {name} ({len(s_rows)} rows) {o_secs}")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
