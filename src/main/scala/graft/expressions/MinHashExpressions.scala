@@ -89,6 +89,13 @@ private[expressions] object Md5Util {
   * because the HOF chain materializes 16 intermediate arrays per row and
   * evaluates interpreted; here each shingle string is read once and hashed
   * 16 times in a tight loop.
+  *
+  * A null element is skipped, as the HOF's `array_min` skips its null md5,
+  * so any set with a non-null element matches the HOF. Two inputs differ
+  * from it on purpose: an empty or all-null set hashes each band over the
+  * literal "null|null|null|null" (the HOF's `concat_ws` drops the null
+  * mins and hashes ""), and a null array yields null (the HOF yields
+  * md5("") per band).
   */
 case class MinHashBandDigests(child: Expression) extends UnaryExpression {
 
@@ -251,14 +258,16 @@ object MinHashBandDigests {
     var i = 0
     val n = shingles.numElements()
     while (i < n) {
-      val bytes = shingles.getUTF8String(i).getBytes
-      var k = 0
-      while (k < NumHashes) {
-        Md5Util.digestInto(Md5Util.seedPrefixes(k), bytes, tmp)
-        if (mins(k) == null) mins(k) = java.util.Arrays.copyOf(tmp, 16)
-        else if (Md5Util.less(tmp, mins(k)))
-          System.arraycopy(tmp, 0, mins(k), 0, 16)
-        k += 1
+      if (!shingles.isNullAt(i)) {
+        val bytes = shingles.getUTF8String(i).getBytes
+        var k = 0
+        while (k < NumHashes) {
+          Md5Util.digestInto(Md5Util.seedPrefixes(k), bytes, tmp)
+          if (mins(k) == null) mins(k) = java.util.Arrays.copyOf(tmp, 16)
+          else if (Md5Util.less(tmp, mins(k)))
+            System.arraycopy(tmp, 0, mins(k), 0, 16)
+          k += 1
+        }
       }
       i += 1
     }
@@ -269,8 +278,7 @@ object MinHashBandDigests {
       var r = 0
       while (r < Rows) {
         if (r > 0) sb.append('|')
-        // empty set: the previous StringBuilder.append(null) appended the
-        // literal "null" — preserved bit-for-bit
+        // empty or all-null set: the literal "null" (see the class doc)
         val m = mins(b * Rows + r)
         sb.append(if (m == null) "null" else Md5Util.hex(m))
         r += 1

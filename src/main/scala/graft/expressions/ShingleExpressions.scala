@@ -99,7 +99,8 @@ object Shingles {
   * window. The digest streams the window's token bytes and the
   * separator straight into one thread-local MessageDigest — no joined
   * string exists at all; md5 is defined over the byte stream, so the
-  * hex result is bit-identical (spec-pinned). Inputs shorter than `len`
+  * hex result is bit-identical (spec-pinned). A null token is skipped
+  * with its separator, as `concat_ws` skips it. Inputs shorter than `len`
   * yield an empty array (callers filter `size(toks) >= len` first).
   */
 case class ShingleHashes(left: Expression, right: Expression)
@@ -137,12 +138,12 @@ object ShingleHashes {
       len: Int): GenericArrayData = {
     val n = toks.numElements()
     if (n < len) return new GenericArrayData(Array.empty[Any])
-    // token byte arrays materialized once, reused by every window
+    // token byte arrays materialized once, reused by every window; a null
+    // token stays null and is skipped
     val bytes = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) {
-      val t = toks.getUTF8String(i)
-      bytes(i) = if (t == null) Array.empty[Byte] else t.getBytes
+      if (!toks.isNullAt(i)) bytes(i) = toks.getUTF8String(i).getBytes
       i += 1
     }
     val md = Md5Util.md5()
@@ -151,9 +152,14 @@ object ShingleHashes {
     i = 0
     while (i <= n - len) {
       var j = 0
+      var first = true
       while (j < len) {
-        if (j > 0) md.update(Space)
-        md.update(bytes(i + j))
+        val b = bytes(i + j)
+        if (b != null) {
+          if (!first) md.update(Space)
+          md.update(b)
+          first = false
+        }
         j += 1
       }
       md.digest(tmp, 0, 16)

@@ -449,8 +449,7 @@ object CurationStore {
     val affParts = deleted.select(col("ingest"))
       .unionByName(fixed.filter(col("chg")).select(col("ingest")))
       .distinct().collect().map(_.getString(0)) // bounded: #ingest dirs
-    val rewrite = fixed
-      .filter(col("ingest").isInCollection(affParts.toSeq))
+    val rewrite = StoreVersioning.inSegments(fixed, affParts.toSeq)
       .drop("chg").transform(Fence)
     affParts.foreach { p =>
       rewrite.filter(col("ingest") === p).drop("ingest")

@@ -44,16 +44,6 @@ object PersistedIndex {
       Seq(("seg", "base")))
   }
 
-  private def ivfLiveSegs(spark: SparkSession, path: String,
-      version: Long): Seq[String] =
-    StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
-
-  private def ivfVectors(spark: SparkSession, path: String,
-      version: Long): DataFrame =
-    spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(ivfLiveSegs(spark, path, version)))
-
   /** Unit-normalized int8 codes for a double vector column — the same
     * normalize-then-quantize recipe as [[SimilarityPipeline.simTopKQ8]]
     * (on unit vectors the integer dot is a monotone cosine proxy). Stored
@@ -89,10 +79,9 @@ object PersistedIndex {
   def appendToIvfIndex(spark: SparkSession, delta: DataFrame,
       path: String): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = ivfLiveSegs(spark, path, -1L)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
     val cents = spark.read.parquet(s"$path/centroids")
-    val storedIds = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val storedIds = StoreVersioning.segments(spark, path, "vectors", live)
       .select(col("vec_id"))
     val fresh = delta
       .select(col("vec_id"), col("label"),
@@ -138,7 +127,8 @@ object PersistedIndex {
       .orderBy(col("ccos").desc, col("cluster"))
       .limit(nprobe)
       .select(col("cluster"))
-    val vectors = ivfVectors(spark, path, version)
+    val vectors = StoreVersioning.segments(spark, path, "vectors",
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
     vectors.filter(col("vec_id") =!= queryId)
       .join(broadcast(probed), "cluster")
       .crossJoin(broadcast(q))
@@ -177,7 +167,8 @@ object PersistedIndex {
       .orderBy(col("ccos").desc, col("cluster"))
       .limit(nprobe)
       .select(col("cluster"))
-    val vectors = ivfVectors(spark, path, version)
+    val vectors = StoreVersioning.segments(spark, path, "vectors",
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
     val candidates = vectors
       .select(col("vec_id"), col("cluster"), col("qv")) // int8 column ONLY
       .filter(col("vec_id") =!= queryId)
@@ -244,7 +235,8 @@ object PersistedIndex {
       .orderBy(col("ccos").desc, col("cluster"))
       .limit(nprobe)
       .select(col("cluster"))
-    val vectors = ivfVectors(spark, path, version)
+    val vectors = StoreVersioning.segments(spark, path, "vectors",
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
     val candidates = vectors
       .select(col("vec_id"), col("cluster"), col("label"), col("qv"))
       .filter(col("label") === filterLabel) // → parquet PushedFilters
@@ -372,10 +364,8 @@ object PersistedIndex {
   def appendToPqIndex(spark: SparkSession, delta: DataFrame,
       path: String): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")
-      .getOrElse("seg", Seq.empty)
-    val storedIds = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
+    val storedIds = StoreVersioning.segments(spark, path, "codes", live)
       .select(col("vec_id"))
     val fresh = delta.select(col("vec_id"), col("label"), col("embedding"))
       .dropDuplicates("vec_id")
@@ -407,10 +397,8 @@ object PersistedIndex {
       version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     val cbs = pqStoredCodebooks(spark, path)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val codes = StoreVersioning.segments(spark, path, "codes",
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
     val recon = concat((0 until SimilarityPipeline.PqM).map { m =>
       element_at(typedlit(cbs(m).toSeq),
         element_at(col("codes"), m + 1) + 1)
@@ -506,10 +494,8 @@ object PersistedIndex {
   def appendToIvfPqIndex(spark: SparkSession, delta: DataFrame,
       path: String): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")
-      .getOrElse("seg", Seq.empty)
-    val storedIds = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
+    val storedIds = StoreVersioning.segments(spark, path, "codes", live)
       .select(col("vec_id"))
     val fresh = delta.select(col("vec_id"), col("label"), col("embedding"))
       .dropDuplicates("vec_id")
@@ -554,10 +540,8 @@ object PersistedIndex {
     * re-encoding is a no-op by construction — cheaper to not re-run it).
     */
   def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")
-      .getOrElse("seg", Seq.empty)
-    val all = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val all = StoreVersioning.segments(spark, path, "codes",
+        StoreVersioning.liveTokens(spark, s"$path/manifest")("seg"))
       .select(col("vec_id"), col("label"), col("codes"), col("v"))
       .transform(Fence)
     val token =
@@ -581,8 +565,8 @@ object PersistedIndex {
       queryId: Long = 0L, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     val cbs = pqStoredCodebooks(spark, path)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val q = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") === queryId)
       .select(col("embedding").cast("array<double>").as("q"))
@@ -592,8 +576,7 @@ object PersistedIndex {
       .orderBy(col("ccos").desc, col("label"))
       .limit(SimilarityPipeline.IvfProbe)
       .select(col("label"))
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val codes = StoreVersioning.segments(spark, path, "codes", live)
     val recon = concat((0 until SimilarityPipeline.PqM).map { m =>
       element_at(typedlit(cbs(m).toSeq),
         element_at(col("codes"), m + 1) + 1)
@@ -659,8 +642,8 @@ object PersistedIndex {
       queryId: Long = 0L, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     val cbs = pqStoredCodebooks(spark, path)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val q = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") === queryId)
       .select(col("embedding").cast("array<double>").as("q"))
@@ -670,8 +653,7 @@ object PersistedIndex {
       .orderBy(col("ccos").desc, col("label"))
       .limit(nprobe)
       .select(col("label"))
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val codes = StoreVersioning.segments(spark, path, "codes", live)
     val recon = concat((0 until SimilarityPipeline.PqM).map { m =>
       element_at(typedlit(cbs(m).toSeq),
         element_at(col("codes"), m + 1) + 1)
@@ -743,8 +725,8 @@ object PersistedIndex {
       version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     val cbs = pqStoredCodebooks(spark, path)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val queries = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
@@ -761,8 +743,7 @@ object PersistedIndex {
       .filter(col("crn") <= nprobe)
       .select(col("q_id"), col("label"))
       .transform(Fence)
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest").isInCollection(live))
+    val codes = StoreVersioning.segments(spark, path, "codes", live)
     val recon = concat((0 until SimilarityPipeline.PqM).map { m =>
       element_at(typedlit(cbs(m).toSeq),
         element_at(col("codes"), m + 1) + 1)
@@ -898,11 +879,6 @@ object PersistedIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/sets/ingest=$token")
   }
 
-  private def dedupLiveSegs(spark: SparkSession, path: String,
-      version: Long): Seq[String] =
-    StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
-
   /** Index maintenance — fold an ACCEPTED delta into the persisted index
     * so tomorrow's run dedups against it too: the delta's
     * digest/band/set rows land in their own immutable segment and the
@@ -913,12 +889,11 @@ object PersistedIndex {
     */
   def appendToDedupIndex(spark: SparkSession, delta: DataFrame,
       path: String): Unit = {
-    val live = dedupLiveSegs(spark, path, -1L)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
     // replayed folds are no-ops (the LSH/IVF store discipline): ids the
     // live segments already hold would otherwise double their band/set
     // rows and inflate every later probe's n_near
-    val storedIds = spark.read.parquet(s"$path/digests")
-      .filter(col("ingest").isInCollection(live))
+    val storedIds = StoreVersioning.segments(spark, path, "digests", live)
       .select(col("doc_id"))
     val fresh = delta.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id")
@@ -940,16 +915,15 @@ object PersistedIndex {
   def dedupDeltaAgainstIndex(spark: SparkSession, delta: DataFrame,
       path: String, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val segs = dedupLiveSegs(spark, path, version)
-    def seg(sub: String) = spark.read.parquet(s"$path/$sub")
-      .filter(col("ingest").isInCollection(segs))
+    val segs =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val deltaPrep = delta
       .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"),
         graft.expressions.VectorExpressions.shingleSetNative(col("text")).as("s"))
       .repartition(col("doc_id"))
-    val idxBands = seg("bands")
-    val idxSets = seg("sets")
-    val idxDigests = seg("digests")
+    val idxBands = StoreVersioning.segments(spark, path, "bands", segs)
+    val idxSets = StoreVersioning.segments(spark, path, "sets", segs)
+    val idxDigests = StoreVersioning.segments(spark, path, "digests", segs)
     val cands = deltaPrep
       .select(col("doc_id"),
         posexplode(graft.expressions.VectorExpressions
@@ -1009,8 +983,7 @@ object PersistedIndex {
       path: String, len: Int = SubstringDedup.SpanLen,
       expectedItems: Long = 1L << 20): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")
-      .getOrElse("seg", Seq.empty)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
     val token =
       s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     SubstringDedup.shingleOccurrences(delta, len)
@@ -1022,9 +995,7 @@ object PersistedIndex {
 
   private def shingleHashes(spark: SparkSession, path: String,
       segs: Seq[String]): DataFrame =
-    spark.read.parquet(s"$path/hashes")
-      .filter(col("ingest").isInCollection(segs))
-      .select(col("h"))
+    StoreVersioning.segments(spark, path, "hashes", segs).select(col("h"))
 
   /** Rebuild the bloom over the given segments into its own immutable
     * `bloom/token=<t>` artifact, then publish the manifest version that
@@ -1061,7 +1032,7 @@ FROM graft_shingle_bloom_build""")
     val hits = occ
       .filter(call_function("graft_might_contain",
         lit(bloomBytes), col("h")))
-      .join(shingleHashes(spark, path, live.getOrElse("seg", Seq.empty)),
+      .join(shingleHashes(spark, path, live("seg")),
         Seq("h"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
     val totals = delta
@@ -1212,7 +1183,8 @@ FROM graft_shingle_bloom_build""")
   def buildTextIndex(spark: SparkSession, corpus: DataFrame,
       path: String): Unit = {
     writeTextIndexDelta(corpus, path, "base", SaveMode.Overwrite)
-    commitTextIndexManifest(spark, path, Seq("base"), Seq.empty, Seq.empty)
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      Seq(("seg", "base")))
   }
 
   /** Append a delta corpus's postings as a NEW immutable segment —
@@ -1226,62 +1198,25 @@ FROM graft_shingle_bloom_build""")
     */
   def appendToTextIndex(spark: SparkSession, delta: DataFrame,
       path: String): Unit = {
-    val (segs, tombs) = textIndexLive(spark, path, -1L)
-    val token =
-      s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
+    val dir = s"$path/manifest"
+    val rows = textIndexRows(StoreVersioning.liveTokens(spark, dir))
+    val token = s"d${StoreVersioning.latestVersion(spark, dir) + 1}"
     writeTextIndexDelta(delta, path, token, SaveMode.Overwrite)
-    commitTextIndexManifest(spark, path, segs :+ token, tombs,
-      textIndexFolded(spark, path))
+    StoreVersioning.commitTokens(spark, dir, rows :+ ("seg", token))
   }
 
-  /** Manifest rows are (kind ∈ seg|tomb, token): which postings/meta/
-    * doclens segments and which tombstone segments a version reads. */
-  private def commitTextIndexManifest(spark: SparkSession, path: String,
-      segs: Seq[String], tombs: Seq[String],
-      folded: Seq[String]): Long =
-    StoreVersioning.commitNextVersion(spark, s"$path/manifest") { staging =>
-      import spark.implicits._
-      (segs.map(("seg", _)) ++ tombs.map(("tomb", _))
-        ++ folded.map(("folded", _)))
-        .toDF("kind", "token").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-    }
-
-  /** Every streaming-batch token EVER folded into this store — carried
-    * through every manifest version (including compactions, which fold
-    * segments away but must not forget them): the replay guard for
-    * [[appendTextIndexBatch]] checks THIS ledger, not segment liveness,
-    * so a batch replayed AFTER a compaction absorbed it cannot re-commit
-    * its postings (which would double those docs' term frequencies). */
-  private def textIndexFolded(spark: SparkSession, path: String): Seq[String] = {
-    val dir = s"$path/manifest"
-    val v = StoreVersioning.latestVersion(spark, dir)
-    if (v == 0) return Seq.empty
-    spark.read.parquet(StoreVersioning.versionDir(dir, v))
-      .collect().filter(_.getString(0) == "folded")
-      .map(_.getString(1)).toSeq.sorted
-  }
-
-  /** The (segment, tombstone) token lists of `version` (latest when -1)
-    * — bounded driver-side read, one row per segment. A never-committed
-    * store reads as empty (the streaming front door's first batch). */
-  private[graft] def textIndexLive(spark: SparkSession, path: String,
-      version: Long): (Seq[String], Seq[String]) = {
-    val dir = s"$path/manifest"
-    val v = if (version > 0) version
-      else StoreVersioning.latestVersion(spark, dir)
-    if (v == 0) return (Seq.empty, Seq.empty)
-    StoreVersioning.requireVersion(spark, dir, v)
-    val rows = spark.read.parquet(StoreVersioning.versionDir(dir, v))
-      .collect()
-    (rows.filter(_.getString(0) == "seg").map(_.getString(1)).toSeq.sorted,
-      rows.filter(_.getString(0) == "tomb").map(_.getString(1)).toSeq.sorted)
-  }
-
-  private def segScan(spark: SparkSession, path: String, sub: String,
-      segs: Seq[String]): DataFrame =
-    spark.read.parquet(s"$path/$sub")
-      .filter(col("ingest").isInCollection(segs))
+  /** A version's manifest rows, to carry into the next version. Kinds:
+    * `seg` (postings/meta/doclens segments), `tomb` (tombstone
+    * segments) and `folded` — every streaming-batch token EVER folded
+    * into this store, carried through every version (compactions
+    * included, which fold segments away but must not forget them): the
+    * replay guard for [[appendTextIndexBatch]] checks THIS ledger, not
+    * segment liveness, so a batch replayed AFTER a compaction absorbed
+    * it cannot re-commit its postings (which would double those docs'
+    * term frequencies). */
+  private def textIndexRows(live: Map[String, Seq[String]])
+      : Seq[(String, String)] =
+    Seq("seg", "tomb", "folded").flatMap(k => live(k).map((k, _)))
 
   private def writeTextIndexDelta(delta: DataFrame, path: String,
       ingest: String, mode: SaveMode): Unit = {
@@ -1316,19 +1251,21 @@ FROM graft_shingle_bloom_build""")
   private[graft] def appendTextIndexBatch(batch: DataFrame, path: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
+    val dir = s"$path/manifest"
     val token = s"b$batchId"
+    val rows = // the stream's first batch meets a never-committed store
+      if (StoreVersioning.latestVersion(spark, dir) == 0) Seq.empty
+      else textIndexRows(StoreVersioning.liveTokens(spark, dir))
     // replay guard against the FOLDED ledger, not segment liveness: a
     // compaction can absorb b<id> into c<v> before the stream
     // checkpoints the batch, and a liveness check would then re-commit
     // the replayed segment NEXT TO the compacted copy, doubling those
     // docs' term frequencies. The ledger remembers every folded token
     // forever, so the replay is a complete no-op (no write either).
-    val folded = textIndexFolded(spark, path)
-    if (folded.contains(token)) return
+    if (rows.contains(("folded", token))) return
     writeTextIndexDelta(batch, path, token, SaveMode.Overwrite)
-    val (segs, tombs) = textIndexLive(spark, path, -1L)
-    commitTextIndexManifest(spark, path, segs :+ token, tombs,
-      folded :+ token)
+    StoreVersioning.commitTokens(spark, dir,
+      rows :+ ("seg", token) :+ ("folded", token))
   }
 
   /** The streaming ingest twin of [[appendToTextIndex]] — routes each
@@ -1363,14 +1300,13 @@ FROM graft_shingle_bloom_build""")
     */
   def deleteFromTextIndex(spark: SparkSession, ids: DataFrame,
       path: String): Unit = {
-    val (segs, tombs) = textIndexLive(spark, path, -1L)
-    val token =
-      s"t${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
+    val dir = s"$path/manifest"
+    val rows = textIndexRows(StoreVersioning.liveTokens(spark, dir))
+    val token = s"t${StoreVersioning.latestVersion(spark, dir) + 1}"
     ids.select(col("doc_id"))
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$path/tombstones/ingest=$token")
-    commitTextIndexManifest(spark, path, segs, tombs :+ token,
-      textIndexFolded(spark, path))
+    StoreVersioning.commitTokens(spark, dir, rows :+ ("tomb", token))
   }
 
   /** Anti-join `df` (must carry doc_id) against the pinned version's
@@ -1382,7 +1318,8 @@ FROM graft_shingle_bloom_build""")
       df: DataFrame, tombs: Seq[String]): DataFrame =
     if (tombs.isEmpty) df
     else df.join(
-      segScan(spark, path, "tombstones", tombs).select(col("doc_id")),
+      StoreVersioning.segments(spark, path, "tombstones", tombs)
+        .select(col("doc_id")),
       Seq("doc_id"), "left_anti")
 
   /** Compact an appended/stream-grown index into a fresh single-ingest
@@ -1407,8 +1344,9 @@ FROM graft_shingle_bloom_build""")
     writeCompacted(spark, src, dst, "base")
     // carry the SOURCE store's folded ledger: a stream redirected to the
     // compacted store must still see its already-folded batch tokens
-    commitTextIndexManifest(spark, dst, Seq("base"), Seq.empty,
-      textIndexFolded(spark, src))
+    StoreVersioning.commitTokens(spark, s"$dst/manifest",
+      ("seg", "base") +: StoreVersioning.liveTokens(spark, s"$src/manifest")(
+        "folded").map(("folded", _)))
   }
 
   /** In-place compaction under the version discipline: the merged
@@ -1424,8 +1362,9 @@ FROM graft_shingle_bloom_build""")
     writeCompacted(spark, path, path, token)
     // the folded ledger SURVIVES compaction — forgetting it would let a
     // late replay of an absorbed batch double its postings
-    commitTextIndexManifest(spark, path, Seq(token), Seq.empty,
-      textIndexFolded(spark, path))
+    val dir = s"$path/manifest"
+    StoreVersioning.commitTokens(spark, dir, ("seg", token) +:
+      StoreVersioning.liveTokens(spark, dir)("folded").map(("folded", _)))
   }
 
   /** Drop segment directories referenced by NO surviving manifest
@@ -1436,14 +1375,14 @@ FROM graft_shingle_bloom_build""")
 
   private def writeCompacted(spark: SparkSession, src: String,
       dst: String, token: String): Unit = {
-    val (segs, tombs) = textIndexLive(spark, src, -1L)
+    val live = StoreVersioning.liveTokens(spark, s"$src/manifest")
     val merged = liveOnly(spark, src,
-      segScan(spark, src, "postings", segs)
+      StoreVersioning.segments(spark, src, "postings", live("seg"))
         .select(col("term"), col("shard"),
           explode(arrays_zip(col("doc_ids"), col("tfs"))).as("z"))
         .select(col("term"), col("shard"),
           col("z.doc_ids").as("doc_id"), col("z.tfs").as("tf")),
-      tombs)
+      live("tomb"))
       .groupBy(col("term"), col("shard"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("tf")).cast("long").as("n_occ"),
@@ -1461,9 +1400,9 @@ FROM graft_shingle_bloom_build""")
     // deleted docs exactly — the compacted index equals a fresh build on
     // the surviving corpus (spec-proven)
     val liveDl = liveOnly(spark, src,
-      segScan(spark, src, "doclens", segs)
+      StoreVersioning.segments(spark, src, "doclens", live("seg"))
         .select(col("doc_id"), col("dl"), col("shard")),
-      tombs)
+      live("tomb"))
       .transform(Fence)
     liveDl.agg(count(lit(1)).cast("long").as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
@@ -1483,8 +1422,9 @@ FROM graft_shingle_bloom_build""")
     */
   def searchTextIndexBm25(spark: SparkSession, path: String,
       terms: Seq[String], k: Int = 10, version: Long = -1L): DataFrame = {
-    val (segs, tombs) = textIndexLive(spark, path, version)
-    val m = segScan(spark, path, "meta", segs)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
+    val (segs, tombs) = (live("seg"), live("tomb"))
+    val m = StoreVersioning.segments(spark, path, "meta", segs)
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
       .head
     val n = m.getLong(0)
@@ -1492,7 +1432,7 @@ FROM graft_shingle_bloom_build""")
     require(terms.nonEmpty, "search needs at least one query term")
     val bucketPred = terms.map(t => col("bucket") === termBucket(lit(t)))
       .reduce(_ || _)
-    val postings = segScan(spark, path, "postings", segs)
+    val postings = StoreVersioning.segments(spark, path, "postings", segs)
       .filter(bucketPred && col("term").isin(terms: _*))
     val tf = postings
       .select(col("term"),
@@ -1502,7 +1442,7 @@ FROM graft_shingle_bloom_build""")
     val tfLive = liveOnly(spark, path, tf, tombs)
     val dfTerm = postings.groupBy(col("term"))
       .agg(sum(col("n_docs")).as("df"))
-    val doclens = segScan(spark, path, "doclens", segs)
+    val doclens = StoreVersioning.segments(spark, path, "doclens", segs)
       .select(col("doc_id"), col("dl"))
     // the ONE shared scoring formula (Retrieval.bm25Weight) with the
     // index's summed statistics riding as literal columns — constant
@@ -1541,8 +1481,9 @@ FROM graft_shingle_bloom_build""")
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id LONG, rank LONG, doc_id LONG, n_terms_hit LONG, score DOUBLE"))
     }
-    val (segs, tombs) = textIndexLive(spark, path, version)
-    val m = segScan(spark, path, "meta", segs)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
+    val (segs, tombs) = (live("seg"), live("tomb"))
+    val m = StoreVersioning.segments(spark, path, "meta", segs)
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
       .head
     val n = m.getLong(0)
@@ -1550,7 +1491,7 @@ FROM graft_shingle_bloom_build""")
     require(terms.nonEmpty, "search needs at least one query term")
     val bucketPred = terms.map(t => col("bucket") === termBucket(lit(t)))
       .reduce(_ || _)
-    val postings = segScan(spark, path, "postings", segs)
+    val postings = StoreVersioning.segments(spark, path, "postings", segs)
       .filter(bucketPred && col("term").isin(terms: _*))
     val tf = postings
       .select(col("term"),
@@ -1560,7 +1501,7 @@ FROM graft_shingle_bloom_build""")
     val tfLive = liveOnly(spark, path, tf, tombs)
     val dfTerm = postings.groupBy(col("term"))
       .agg(sum(col("n_docs")).as("df"))
-    val doclens = segScan(spark, path, "doclens", segs)
+    val doclens = StoreVersioning.segments(spark, path, "doclens", segs)
       .select(col("doc_id"), col("dl"))
     // the ONE shared scoring formula, statistics as literal columns
     // (see searchTextIndexBm25) — scores unchanged
@@ -1620,13 +1561,14 @@ FROM graft_shingle_bloom_build""")
     */
   def searchTextIndex(spark: SparkSession, path: String,
       terms: Seq[String], k: Int = 10, version: Long = -1L): DataFrame = {
-    val (segs, tombs) = textIndexLive(spark, path, version)
-    val n = segScan(spark, path, "meta", segs)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
+    val (segs, tombs) = (live("seg"), live("tomb"))
+    val n = StoreVersioning.segments(spark, path, "meta", segs)
       .agg(sum(col("n_docs"))).head.getLong(0)
     require(terms.nonEmpty, "search needs at least one query term")
     val bucketPred = terms.map(t => col("bucket") === termBucket(lit(t)))
       .reduce(_ || _)
-    val postings = segScan(spark, path, "postings", segs)
+    val postings = StoreVersioning.segments(spark, path, "postings", segs)
       .filter(bucketPred && col("term").isin(terms: _*))
     val tf = postings
       .select(col("term"),
@@ -1702,41 +1644,28 @@ FROM graft_shingle_bloom_build""")
     cents.write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
     val clusters = nodes.select(col("cluster").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq // bounded: <= k
-    commitKnnManifest(spark, path, Seq("base"),
-      clusters.map(_ -> "base").toMap)
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      knnRows(Seq("base"), clusters.map(_ -> "base").toMap))
   }
 
-  /** Manifest rows: ("nodes", -1, token) per live node segment, and
-    * ("edges", cluster, token) mapping each cluster to the segment
+  /** Manifest rows: ("nodes", token) per live node segment, and
+    * ("edges", "<cluster>:<token>") mapping each cluster to the segment
     * holding its CURRENT edge rows — the Iceberg-style file-pointer
     * trick on plain parquet that makes folds purely ADDITIVE: a fold
     * writes new segments and remaps touched clusters; no old file is
     * ever rewritten, so readers pinned to the previous version are
-    * untouched. */
-  private def commitKnnManifest(spark: SparkSession, path: String,
-      nodeSegs: Seq[String], edgeMap: Map[Long, String]): Long =
-    StoreVersioning.commitNextVersion(spark, s"$path/manifest") { staging =>
-      import spark.implicits._
-      (nodeSegs.map(t => ("nodes", -1L, t)) ++
-        edgeMap.toSeq.map { case (c, t) => ("edges", c, t) })
-        .toDF("kind", "cluster", "token").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-    }
+    * untouched. [[knnEdges]] decodes the pointers. */
+  private def knnRows(nodeSegs: Seq[String],
+      edgeMap: Map[Long, String]): Seq[(String, String)] =
+    nodeSegs.map(("nodes", _)) ++
+      edgeMap.toSeq.sorted.map { case (c, t) => ("edges", s"$c:$t") }
 
-  /** (node segments, cluster → edge segment) of `version` (latest when
-    * -1) — bounded driver-side read: #segments + #clusters rows. */
-  private[graft] def knnManifest(spark: SparkSession, path: String,
-      version: Long = -1L): (Seq[String], Map[Long, String]) = {
-    val dir = s"$path/manifest"
-    val v = if (version > 0) version
-      else StoreVersioning.latestVersion(spark, dir)
-    StoreVersioning.requireVersion(spark, dir, v)
-    val rows = spark.read.parquet(StoreVersioning.versionDir(dir, v))
-      .collect()
-    (rows.filter(_.getString(0) == "nodes").map(_.getString(2)).toSeq.sorted,
-      rows.filter(_.getString(0) == "edges")
-        .map(r => r.getLong(1) -> r.getString(2)).toMap)
-  }
+  /** cluster → edge segment of a pinned version's manifest. */
+  private def knnEdges(live: Map[String, Seq[String]]): Map[Long, String] =
+    live("edges").map { e =>
+      val (c, t) = e.splitAt(e.indexOf(':'))
+      c.toLong -> t.tail
+    }.toMap
 
   /** Fold a batch of new vectors into the store: assign to the FROZEN
     * centroids, drop ids the store already holds (idempotence — a
@@ -1757,7 +1686,8 @@ FROM graft_shingle_bloom_build""")
   def appendToKnnGraphStore(spark: SparkSession, batch: DataFrame,
       path: String): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val (nodeSegs, edgeMap) = knnManifest(spark, path)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")
+    val (nodeSegs, edgeMap) = (live("nodes"), knnEdges(live))
     val cents = spark.read.parquet(s"$path/centroids")
     val assigned = SimilarityPipeline.assignToCentroids(
         batch.select(col("vec_id"), col("label"),
@@ -1771,8 +1701,8 @@ FROM graft_shingle_bloom_build""")
     val touchedAll = assigned.select("cluster").distinct() // <= k rows
     // partition-column inference reads `cluster` back as int — normalize
     // to the assignment's long before the union
-    val storedAssigned = spark.read.parquet(s"$path/nodes")
-      .filter(col("seg").isInCollection(nodeSegs)) // the PINNED snapshot
+    val storedAssigned = StoreVersioning // the PINNED snapshot
+      .segments(spark, path, "nodes", nodeSegs, "seg")
       .withColumn("cluster", col("cluster").cast("long"))
       .join(broadcast(touchedAll), Seq("cluster")) // DPP prunes the rest
       .select(col("vec_id"), col("cluster"), col("v"))
@@ -1804,8 +1734,8 @@ FROM graft_shingle_bloom_build""")
     graft.sources.CorpusWriter.writePartitioned(newEdges,
       s"$path/edges/seg=$token", Seq("cluster"), "vec_id")
     val parts = touched.collect().map(_.getLong(0)) // bounded: <= k
-    commitKnnManifest(spark, path, nodeSegs :+ token,
-      edgeMap ++ parts.map(_ -> token))
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      knnRows(nodeSegs :+ token, edgeMap ++ parts.map(_ -> token)))
   }
 
   /** The stored graph at `version` (latest when -1), read back in
@@ -1816,7 +1746,8 @@ FROM graft_shingle_bloom_build""")
     */
   def readKnnGraphStore(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame = {
-    val (_, edgeMap) = knnManifest(spark, path, version)
+    val edgeMap =
+      knnEdges(StoreVersioning.liveTokens(spark, s"$path/manifest", version))
     val bySeg = edgeMap.groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
     // an empty edge map (store built from an empty frame) must read as
     // an empty graph, not crash reduce on an empty predicate list
@@ -1904,7 +1835,8 @@ FROM graft_shingle_bloom_build""")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/normals")
     writeLshSegment(spark, vectors, path, "base")
-    commitLshManifest(spark, path, Seq("base"))
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      Seq(("seg", "base")))
   }
 
   private def lshNormals(spark: SparkSession, path: String): DataFrame =
@@ -1924,21 +1856,6 @@ FROM graft_shingle_bloom_build""")
       .parquet(s"$path/vectors/ingest=$token")
   }
 
-  // the LSH manifest speaks the SHARED (kind, token) dialect — a
-  // bespoke 1-column schema here once forced its own reader AND its own
-  // gc (StoreVersioning.gcSegments could not parse it)
-  private def commitLshManifest(spark: SparkSession, path: String,
-      tokens: Seq[String]): Long =
-    StoreVersioning.commitTokens(spark, s"$path/manifest",
-      tokens.map(("seg", _)))
-
-  /** The live ingest tokens of `version` (latest when -1) — bounded
-    * driver-side read, one row per segment. */
-  private def lshLiveTokens(spark: SparkSession, path: String,
-      version: Long): Seq[String] =
-    StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
-
   /** Fold a batch of new vectors in: sign against the FROZEN normals,
     * drop ids the live segments already hold (a replayed batch becomes a
     * no-op — the [[appendToKnnGraphStore]] idempotence contract), land
@@ -1949,9 +1866,8 @@ FROM graft_shingle_bloom_build""")
   def appendToLshIndex(spark: SparkSession, batch: DataFrame,
       path: String): Unit = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = lshLiveTokens(spark, path, -1L)
-    val storedIds = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
+    val storedIds = StoreVersioning.segments(spark, path, "vectors", live)
       .select(col("vec_id"))
     val fresh = batch
       .select(col("vec_id"), col("label"), col("embedding"))
@@ -1961,7 +1877,8 @@ FROM graft_shingle_bloom_build""")
     if (fresh.isEmpty) return // full replay — nothing to fold
     val token = s"d${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     writeLshSegment(spark, fresh, path, token)
-    commitLshManifest(spark, path, live :+ token)
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      (live :+ token).map(("seg", _)))
   }
 
   /** The streaming ingest twin — each arriving micro-batch folds through
@@ -1987,14 +1904,14 @@ FROM graft_shingle_bloom_build""")
     * segments no surviving version references).
     */
   def compactLshIndex(spark: SparkSession, path: String): Unit = {
-    val live = lshLiveTokens(spark, path, -1L)
-    val all = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val all = StoreVersioning.segments(spark, path, "vectors",
+        StoreVersioning.liveTokens(spark, s"$path/manifest")("seg"))
       .select(col("vec_id"), col("label"), col("embedding"))
       .transform(Fence)
     val token = s"c${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     writeLshSegment(spark, all, path, token)
-    commitLshManifest(spark, path, Seq(token))
+    StoreVersioning.commitTokens(spark, s"$path/manifest",
+      Seq(("seg", token)))
   }
 
   /** Drop segments referenced by NO surviving manifest version — run
@@ -2025,9 +1942,9 @@ FROM graft_shingle_bloom_build""")
       k: Int = LshTopK, version: Long = -1L,
       audit: Boolean = true): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = lshLiveTokens(spark, path, version)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val q = vectors.filter(col("vec_id") === qId)
       .select(col("embedding").as("q"))
     val qBuckets = SimilarityPipeline.lshSignatures(
@@ -2045,8 +1962,7 @@ FROM graft_shingle_bloom_build""")
         col("band") === r.getLong(0) && col("pfx") === r.getLong(1) &&
           col("bval") === r.getLong(2)
       }.reduce(_ || _)
-    val candIds = spark.read.parquet(s"$path/buckets")
-      .filter(col("ingest").isInCollection(live))
+    val candIds = StoreVersioning.segments(spark, path, "buckets", live)
       .filter(bucketPred)
       .filter(col("vec_id") =!= qId)
       .select(col("vec_id")).distinct()
@@ -2098,9 +2014,9 @@ FROM graft_shingle_bloom_build""")
       filterLabel: Int, qId: Long = 0L, k: Int = LshTopK,
       version: Long = -1L, audit: Boolean = true): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
-    val live = lshLiveTokens(spark, path, version)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val q = vectors.filter(col("vec_id") === qId)
       .select(col("embedding").as("q"))
     val qBuckets = SimilarityPipeline.lshSignatures(
@@ -2116,8 +2032,7 @@ FROM graft_shingle_bloom_build""")
         col("band") === r.getLong(0) && col("pfx") === r.getLong(1) &&
           col("bval") === r.getLong(2)
       }.reduce(_ || _)
-    val candIds = spark.read.parquet(s"$path/buckets")
-      .filter(col("ingest").isInCollection(live))
+    val candIds = StoreVersioning.segments(spark, path, "buckets", live)
       .filter(bucketPred)
       .filter(col("vec_id") =!= qId)
       .select(col("vec_id")).distinct()
@@ -2175,16 +2090,15 @@ FROM graft_shingle_bloom_build""")
       nQueries: Int = 8, k: Int = 5, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
-    val live = lshLiveTokens(spark, path, version)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val qVecs = vectors.filter(col("vec_id") < nQueries)
     val qBands = SimilarityPipeline.lshSignatures(qVecs,
         lshNormals(spark, path))
       .select(col("vec_id").as("q_id"), col("band").as("qband"),
         col("bval").as("qval"))
-    val cand = spark.read.parquet(s"$path/buckets")
-      .filter(col("ingest").isInCollection(live))
+    val cand = StoreVersioning.segments(spark, path, "buckets", live)
       .filter(col("vec_id") >= nQueries)
       .join(broadcast(qBands),
         col("band") === col("qband") && col("bval") === col("qval"))
@@ -2245,9 +2159,9 @@ FROM graft_shingle_bloom_build""")
       queries: DataFrame, k: Int = 5, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
-    val live = lshLiveTokens(spark, path, version)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val qVecs = queries.select(col("vec_id").as("q_id"),
       col("embedding").cast("array<double>").as("q"))
     val qBands = SimilarityPipeline.lshSignatures(
@@ -2260,8 +2174,7 @@ FROM graft_shingle_bloom_build""")
     // must not mask that (possibly top-1) corpus vector — the
     // store-resident panel probe (probeLshIndexBatch) is the one that
     // excludes self-matches
-    val cand = spark.read.parquet(s"$path/buckets")
-      .filter(col("ingest").isInCollection(live))
+    val cand = StoreVersioning.segments(spark, path, "buckets", live)
       .join(broadcast(qBands),
         col("band") === col("qband") && col("bval") === col("qval"))
       .select(col("q_id"), col("vec_id")).distinct()
@@ -2343,9 +2256,9 @@ FROM graft_shingle_bloom_build""")
       nQueries: Int = 8, k: Int = 5, version: Long = -1L): DataFrame = {
     graft.expressions.VectorExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
-    val live = lshLiveTokens(spark, path, version)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val unionLabels = (0 until nQueries).map(lshBatchLabelOf).distinct
     val matching = vectors
       .filter(col("label").isInCollection(unionLabels)) // → PushedFilters
@@ -2355,8 +2268,7 @@ FROM graft_shingle_bloom_build""")
         lshNormals(spark, path))
       .select(col("vec_id").as("q_id"), col("band").as("qband"),
         col("bval").as("qval"))
-    val cand = spark.read.parquet(s"$path/buckets")
-      .filter(col("ingest").isInCollection(live))
+    val cand = StoreVersioning.segments(spark, path, "buckets", live)
       .filter(col("vec_id") >= nQueries)
       .join(broadcast(qBands),
         col("band") === col("qband") && col("bval") === col("qval"))
@@ -2439,31 +2351,30 @@ FROM t WHERE rank <= $k ORDER BY q_id, rank"""
     */
   private[graft] def storeLayout(kind: String): StoreVersioning.StoreLayout = {
     import StoreVersioning.{StoreLayout, SubStore, kindTokens}
-    def one(subDirs: Seq[String], prefix: String = "ingest=",
-        manifestKind: String = "seg") =
-      StoreLayout(Seq(SubStore(subDirs, prefix, kindTokens(manifestKind))))
+    def one(subDirs: Seq[String], kinds: String*) =
+      StoreLayout(Seq(SubStore(subDirs, "ingest=", kindTokens(kinds: _*))))
     kind match {
-      case "ivf" => one(Seq("vectors"))
-      case "pq" => one(Seq("codes"))
-      case "ivfpq" => one(Seq("codes"))
-      case "lsh" => one(Seq("buckets", "vectors"))
-      case "dedup" => one(Seq("digests", "bands", "sets"))
+      case "ivf" => one(Seq("vectors"), "seg")
+      case "pq" => one(Seq("codes"), "seg")
+      case "ivfpq" => one(Seq("codes"), "seg")
+      case "lsh" => one(Seq("buckets", "vectors"), "seg")
+      case "dedup" => one(Seq("digests", "bands", "sets"), "seg")
       case "shingle" => StoreLayout(Seq(
         SubStore(Seq("hashes"), "ingest=", kindTokens("seg")),
         SubStore(Seq("bloom"), "token=", kindTokens("bloom"))))
-      case "text" => StoreLayout(Seq(SubStore(
-        Seq("postings", "meta", "doclens", "tombstones"), "ingest=",
-        (s, p, v) => { val (segs, tombs) = textIndexLive(s, p, v)
-          (segs ++ tombs).toSet })))
+      case "text" =>
+        one(Seq("postings", "meta", "doclens", "tombstones"), "seg", "tomb")
       case "knn" => StoreLayout(Seq(SubStore(
         Seq("nodes", "edges"), "seg=",
-        (s, p, v) => { val (nodeSegs, edgeMap) = knnManifest(s, p, v)
-          (nodeSegs ++ edgeMap.values).toSet })))
+        (s, p, v) => {
+          val live = StoreVersioning.liveTokens(s, s"$p/manifest", v)
+          (live("nodes") ++ knnEdges(live).values).toSet
+        })))
       case "retrieval" =>
-        one(Seq("chunkmeta", "vectors", "norms", "postings"))
+        one(Seq("chunkmeta", "vectors", "norms", "postings"), "seg")
       // the quality-history store: one release segment per append
       // (kind "rel"); retention bounds how much history drift keeps
-      case "scorecard" => one(Seq("releases"), manifestKind = "rel")
+      case "scorecard" => one(Seq("releases"), "rel")
       case "curation" => StoreLayout(Seq.empty)
       case other => throw new IllegalArgumentException(
         s"unknown store kind '$other'; known: ivf, pq, ivfpq, lsh, " +

@@ -567,8 +567,7 @@ ORDER BY ranker, query_id"""
     val prev = StoreVersioning.latestVersion(spark, s"$path/manifest")
     val live = // the first release starts an empty history
       if (prev == 0L) Seq.empty[String]
-      else StoreVersioning.liveTokens(spark, s"$path/manifest")
-        .getOrElse("rel", Seq.empty)
+      else StoreVersioning.liveTokens(spark, s"$path/manifest")("rel")
     val v = prev + 1
     val token = f"r$v%04d" // zero-padded: lexicographic == numeric order
     scorecard.coalesce(1).write.mode(SaveMode.Overwrite)
@@ -585,8 +584,8 @@ ORDER BY ranker, query_id"""
     * micro-units (or appeared/disappeared). */
   def scorecardDrift(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame = {
-    val live = StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("rel", Seq.empty).sorted
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("rel")
     require(live.size >= 2,
       s"scorecardDrift($path): needs >= 2 releases, found ${live.size}")
     val releases = spark.read.parquet(s"$path/releases")

@@ -42,11 +42,6 @@ object RetrievalStore {
 
   import RetrievalProgram.IdBase
 
-  private def segs(spark: SparkSession, path: String,
-      version: Long): Seq[String] =
-    StoreVersioning.liveTokens(spark, s"$path/manifest", version)
-      .getOrElse("seg", Seq.empty)
-
   /** Chunk → sparse-embed → assign-to-frozen-seeds → land one immutable
     * segment (vectors/norms cluster-partitioned, postings, chunkmeta). */
   private def writeSegment(spark: SparkSession, chunks: DataFrame,
@@ -130,9 +125,8 @@ object RetrievalStore {
     */
   def appendToRetrievalStore(spark: SparkSession, docBatch: DataFrame,
       path: String): Unit = {
-    val live = segs(spark, path, -1L)
-    val storedMeta = spark.read.parquet(s"$path/chunkmeta")
-      .filter(col("ingest").isInCollection(live))
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
+    val storedMeta = StoreVersioning.segments(spark, path, "chunkmeta", live)
     val storedDocs = storedMeta
       .select(floor(col("chunk_id") / IdBase).cast(LongType).as("doc_id"))
       .distinct()
@@ -204,10 +198,9 @@ object RetrievalStore {
         s"${seedHit.headOption.map(_.getLong(0)).getOrElse(-1L)} is a " +
         "frozen-quantizer seed doc — its seed vector is derived content; " +
         "rebuild the store to forget it")
-    val live = segs(spark, path, -1L)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
     val docOf = floor(col("chunk_id") / IdBase).cast(LongType).as("doc_id")
-    val affected = spark.read.parquet(s"$path/chunkmeta")
-      .filter(col("ingest").isInCollection(live))
+    val affected = StoreVersioning.segments(spark, path, "chunkmeta", live)
       .withColumn("doc_id", docOf)
       .join(drop, Seq("doc_id"), "left_semi")
       .select("ingest").distinct()
@@ -245,13 +238,11 @@ object RetrievalStore {
     * [[PersistedIndex.compactIvfPqIndex]] discipline).
     */
   def compactRetrievalStore(spark: SparkSession, path: String): Unit = {
-    val live = segs(spark, path, -1L)
+    val live = StoreVersioning.liveTokens(spark, s"$path/manifest")("seg")
     val token =
       s"c${StoreVersioning.latestVersion(spark, s"$path/manifest") + 1}"
     def liveRows(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub")
-        .filter(col("ingest").isInCollection(live))
-        .drop("ingest")
+      StoreVersioning.segments(spark, path, sub, live).drop("ingest")
         .transform(Fence) // materialize BEFORE writing into the same tree
     graft.sources.CorpusWriter.writePartitioned(liveRows("vectors"),
       s"$path/vectors/ingest=$token", Seq("cluster"), "chunk_id")
@@ -307,8 +298,8 @@ object RetrievalStore {
     * fences, which erase upstream plans from the final explain). */
   private[graft] def probeTf(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame =
-    spark.read.parquet(s"$path/postings")
-      .filter(col("ingest").isInCollection(segs(spark, path, version)))
+    StoreVersioning.segments(spark, path, "postings",
+        StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
       .filter(col("term").isin(graft.operators.Retrieval.QueryTerms: _*))
       .select(col("chunk_id"), col("dl"), col("term"), col("tf"))
 
@@ -319,8 +310,8 @@ object RetrievalStore {
 
   private def probeStats(spark: SparkSession, path: String,
       version: Long): DataFrame =
-    spark.read.parquet(s"$path/chunkmeta")
-      .filter(col("ingest").isInCollection(segs(spark, path, version)))
+    StoreVersioning.segments(spark, path, "chunkmeta",
+        StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
       .agg(count(lit(1)).as("n_corpus"),
         avg(col("dl").cast("double")).as("avgdl"))
 
@@ -328,16 +319,15 @@ object RetrievalStore {
     * partitions only, unfenced (the spec-assertable plan). */
   private[graft] def probeVectorScored(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame = {
-    val live = segs(spark, path, version)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val seedVecs = spark.read.parquet(s"$path/seeds")
     val seedNorms = spark.read.parquet(s"$path/seednorms")
     val (qSparse, qNorm) = RetrievalProgram.queryVec(spark)
     val probe = RetrievalProgram.probeSeeds(qSparse, qNorm,
       seedVecs, seedNorms)
-    val norms = spark.read.parquet(s"$path/norms")
-      .filter(col("ingest").isInCollection(live))
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val norms = StoreVersioning.segments(spark, path, "norms", live)
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val qDots = vectors
       .join(broadcast(probe), "cluster") // partition-pruned scan
       .join(broadcast(qSparse), "pos")
@@ -384,8 +374,8 @@ object RetrievalStore {
     * the [[probeTf]] pattern). */
   private[graft] def probeTfBatch(spark: SparkSession, path: String,
       panel: Seq[(Long, Seq[String])], version: Long = -1L): DataFrame =
-    spark.read.parquet(s"$path/postings")
-      .filter(col("ingest").isInCollection(segs(spark, path, version)))
+    StoreVersioning.segments(spark, path, "postings",
+        StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg"))
       .filter(col("term").isin(panel.flatMap(_._2).distinct: _*))
       .select(col("chunk_id"), col("dl"), col("term"), col("tf"))
 
@@ -396,16 +386,15 @@ object RetrievalStore {
   private[graft] def probeVectorScoredBatch(spark: SparkSession,
       path: String, panel: Seq[(Long, Seq[String])],
       version: Long = -1L): DataFrame = {
-    val live = segs(spark, path, version)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val seedVecs = spark.read.parquet(s"$path/seeds")
     val seedNorms = spark.read.parquet(s"$path/seednorms")
     val (qSparse, qNorm) = RetrievalProgram.panelVecs(spark, panel)
     val probe = RetrievalProgram.probeSeedsBatch(qSparse, qNorm,
       seedVecs, seedNorms, RetrievalProgram.NProbe)
-    val norms = spark.read.parquet(s"$path/norms")
-      .filter(col("ingest").isInCollection(live))
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val norms = StoreVersioning.segments(spark, path, "norms", live)
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
     val qDots = vectors
       .join(broadcast(probe), "cluster") // partition-pruned scan
       .join(broadcast(qSparse), Seq("query_id", "pos"))
@@ -460,7 +449,8 @@ object RetrievalStore {
   private[graft] def probeVectorScoredFiltered(spark: SparkSession,
       path: String, loDoc: Long, hiDoc: Long,
       version: Long = -1L): DataFrame = {
-    val live = segs(spark, path, version)
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
     val lo = loDoc * IdBase
     val hi = hiDoc * IdBase
     val seedVecs = spark.read.parquet(s"$path/seeds")
@@ -468,11 +458,9 @@ object RetrievalStore {
     val (qSparse, qNorm) = RetrievalProgram.queryVec(spark)
     val probe = RetrievalProgram.probeSeeds(qSparse, qNorm,
       seedVecs, seedNorms, RetrievalProgram.NProbeFiltered)
-    val norms = spark.read.parquet(s"$path/norms")
-      .filter(col("ingest").isInCollection(live))
+    val norms = StoreVersioning.segments(spark, path, "norms", live)
       .filter(col("chunk_id") >= lo && col("chunk_id") < hi)
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest").isInCollection(live))
+    val vectors = StoreVersioning.segments(spark, path, "vectors", live)
       .filter(col("chunk_id") >= lo && col("chunk_id") < hi)
     val qDots = vectors
       .join(broadcast(probe), "cluster") // partition-pruned scan
@@ -540,9 +528,9 @@ object RetrievalStore {
     */
   def storeStats(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame = {
-    val live = segs(spark, path, version)
-    def scan(sub: String): DataFrame = spark.read.parquet(s"$path/$sub")
-      .filter(col("ingest").isInCollection(live))
+    val live =
+      StoreVersioning.liveTokens(spark, s"$path/manifest", version)("seg")
+    def scan(sub: String) = StoreVersioning.segments(spark, path, sub, live)
     def row(name: String, df: DataFrame, keys: org.apache.spark.sql.Column,
         checksum: org.apache.spark.sql.Column): DataFrame =
       df.agg(count(lit(1)).cast(LongType).as("n_rows"),

@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Shared version discipline for every persisted store in the engine —
   * the curation store's `manifest/version=N` contract
@@ -21,6 +24,19 @@ import org.apache.spark.sql.SparkSession
   *     never dropped, and [[requireVersion]] turns a read of a pruned or
   *     never-written version into an error instead of a silently-empty
   *     frame.
+  *
+  * Segment stores share one manifest and one scan:
+  *
+  *   - a version of a segment store is one UTF-8 file,
+  *     `<path>/manifest/version=N/tokens.tsv`, one `kind<TAB>token` line
+  *     per row (`seg`/`tomb`/`folded` segment tokens, the shingle store's
+  *     `bloom`, the kNN store's `nodes` and `edges` = `<cluster>:<seg>`).
+  *     [[commitTokens]] is its only writer and [[liveTokens]] its only
+  *     reader; both are driver-side filesystem calls that start no Spark
+  *     job;
+  *   - [[segments]] is the one live-segment scan: a sub-store read whole
+  *     and filtered on its segment partition column, so the token list
+  *     lands in the scan's PartitionFilters.
   *
   * Every filesystem touch resolves the store path's OWN filesystem
   * (`Path.getFileSystem`), never the cluster default — a store on
@@ -114,39 +130,76 @@ object StoreVersioning {
     }
   }
 
-  /** The common manifest shape for segment stores whose versions are a
-    * flat list of (kind, token) rows — which immutable `ingest=<token>`
-    * segments (and kind-specific artifacts) a version reads. Publish
-    * with [[commitTokens]], resolve with [[liveTokens]].
-    */
-  def commitTokens(spark: SparkSession, manifestDir: String,
-      rows: Seq[(String, String)]): Long =
-    commitNextVersion(spark, manifestDir) { staging =>
-      import spark.implicits._
-      rows.toDF("kind", "token").coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-    }
+  /** The manifest file inside a version directory. */
+  private val TokensFile = "tokens.tsv"
 
-  /** Drop `ingest=<token>` segment directories referenced by NO
-    * surviving manifest version — the retention pass run after
-    * [[pruneVersions]] (which drops version dirs but must leave
-    * segments alone: older surviving versions may still reference
-    * them). Bounded: one manifest read per surviving version plus one
-    * directory listing per sub-store.
-    */
-  def gcSegments(spark: SparkSession, path: String, subDirs: Seq[String],
-      kind: String = "seg"): Unit = {
-    val dir = s"$path/manifest"
-    val referenced = listVersions(spark, dir)
-      .flatMap(v => liveTokens(spark, dir, v).getOrElse(kind, Seq.empty))
-      .toSet
-    gcUnreferenced(spark, path, referenced, subDirs)
+  /** Publish the next version of a segment store's manifest: a flat list
+    * of (kind, token) rows — which immutable segments (and kind-specific
+    * artifacts) the version reads — written as one `kind<TAB>token` line
+    * each. Resolve with [[liveTokens]]. */
+  def commitTokens(spark: SparkSession, manifestDir: String,
+      rows: Seq[(String, String)]): Long = {
+    rows.foreach { case (kind, token) =>
+      require(!(kind + token).exists(c => c == '\t' || c == '\n'),
+        s"manifest row ($kind, $token) holds a tab or a newline")
+    }
+    val f = fs(spark, manifestDir)
+    commitNextVersion(spark, manifestDir) { staging =>
+      val out = f.create(new Path(s"$staging/$TokensFile"), true)
+      try out.write(rows.map { case (k, t) => s"$k\t$t\n" }.mkString
+        .getBytes(UTF_8))
+      finally out.close()
+    }
   }
 
-  /** The deletion half of [[gcSegments]] for stores whose referenced-token
-    * set needs a CUSTOM computation (multi-kind manifests, cluster→segment
-    * maps): drop every `<prefix><token>` directory under each sub-store
-    * whose token is not in `referenced`. One listing per sub-store. */
+  /** (kind → tokens) of `version` (latest when -1), tokens sorted; a kind
+    * the version does not list reads as empty. A version directory
+    * without a manifest file (a store persisted by a pre-(kind, token)
+    * build) or with a malformed line fails loudly instead of resolving
+    * to a silently smaller live set, where probes would scan fewer
+    * segments than the version holds. */
+  def liveTokens(spark: SparkSession, manifestDir: String,
+      version: Long = -1L): Map[String, Seq[String]] = {
+    val v = if (version > 0) version else latestVersion(spark, manifestDir)
+    requireVersion(spark, manifestDir, v)
+    val f = fs(spark, manifestDir)
+    val file = new Path(s"${versionDir(manifestDir, v)}/$TokensFile")
+    def malformed(why: String) = new IllegalArgumentException(
+      s"manifest $manifestDir version $v $why; expected (kind, token) " +
+        s"lines in $TokensFile — a store persisted by a pre-(kind, token) " +
+        "build must be rebuilt")
+    if (!f.exists(file)) throw malformed(s"has no $TokensFile")
+    val in = f.open(file)
+    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    // every line ends in '\n', so a torn file fails here too
+    if (text.nonEmpty && !text.endsWith("\n")) throw malformed("is truncated")
+    text.split("\n", -1).toSeq.dropRight(1).map { line =>
+        line.split("\t", -1) match {
+          case Array(kind, token) => kind -> token
+          case _ => throw malformed(s"has the line '$line'")
+        }
+      }
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+      .withDefaultValue(Seq.empty)
+  }
+
+  /** `df` restricted to the rows of the given segments — the filter half
+    * of [[segments]], for a frame derived from a segment scan. */
+  def inSegments(df: DataFrame, tokens: Seq[String],
+      partition: String = "ingest"): DataFrame =
+    df.filter(col(partition).isInCollection(tokens))
+
+  /** The one live-segment scan: the rows of sub-store `<path>/<sub>` that
+    * live in the `<partition>=<token>` segments `tokens` names (usually a
+    * [[liveTokens]] kind). The token list reaches the scan's
+    * PartitionFilters, so only live segment directories are read. */
+  def segments(spark: SparkSession, path: String, sub: String,
+      tokens: Seq[String], partition: String = "ingest"): DataFrame =
+    inSegments(spark.read.parquet(s"$path/$sub"), tokens, partition)
+
+  /** Drop every `<prefix><token>` directory under each sub-store whose
+    * token is not in `referenced` — the deletion half of [[gcLayout]].
+    * One listing per sub-store. */
   def gcUnreferenced(spark: SparkSession, path: String,
       referenced: Set[String], subDirs: Seq[String],
       prefix: String = "ingest="): Unit = {
@@ -174,11 +227,13 @@ object StoreVersioning {
     * pure version pruning for them. */
   final case class StoreLayout(subStores: Seq[SubStore])
 
-  /** The common referenced-token computation: one `kind`'s tokens from
-    * the shared (kind, token) manifest dialect. */
-  def kindTokens(kind: String): (SparkSession, String, Long) => Set[String] =
-    (spark, path, v) =>
-      liveTokens(spark, s"$path/manifest", v).getOrElse(kind, Seq.empty).toSet
+  /** The common referenced-token computation: the tokens of the given
+    * manifest kinds. */
+  def kindTokens(kinds: String*): (SparkSession, String, Long) => Set[String] =
+    (spark, path, v) => {
+      val live = liveTokens(spark, s"$path/manifest", v)
+      kinds.flatMap(live).toSet
+    }
 
   /** The gc half of [[retain]]: drop segment directories referenced by
     * NO surviving manifest version — the per-store `gcXxxSegments`
@@ -194,7 +249,7 @@ object StoreVersioning {
   }
 
   /** ONE retention policy for every persisted store (the round-13
-    * unification of gcTextIndexSegments / gcLshSegments / gcSegments /
+    * unification of gcTextIndexSegments / gcLshSegments /
     * pruneManifestVersions): keep the `keep` most recent manifest
     * versions, then drop every segment directory no surviving version
     * references. The CURRENT version is never dropped; a pinned reader
@@ -205,33 +260,5 @@ object StoreVersioning {
       layout: StoreLayout): Unit = {
     pruneVersions(spark, s"$path/manifest", keep)
     gcLayout(spark, path, layout)
-  }
-
-  /** (kind → tokens) of `version` (latest when -1) — bounded driver-side
-    * read, one row per segment. */
-  def liveTokens(spark: SparkSession, manifestDir: String,
-      version: Long = -1L): Map[String, Seq[String]] = {
-    val v = if (version > 0) version else latestVersion(spark, manifestDir)
-    requireVersion(spark, manifestDir, v)
-    val df = spark.read.parquet(versionDir(manifestDir, v))
-    // loud dialect check: a manifest written by a pre-(kind, token) build
-    // (the LSH store's bespoke 1-column token schema before round 12)
-    // would otherwise be read positionally as kind=<token> rows and
-    // resolve to a silently-EMPTY live set — probes would scan zero
-    // segments instead of failing. Stores are session-temp today, but
-    // the failure mode is too quiet to leave unpinned.
-    // column SET check (order-insensitive): a manifest written with the
-    // columns in another order is semantically valid — the positional
-    // reads below go through a by-name select. The loud dialect check
-    // stays for genuinely foreign schemas (the pre-(kind, token) LSH
-    // store's 1-column layout would otherwise resolve to a silently
-    // EMPTY live set and probes would scan zero segments).
-    require(df.columns.toSet == Set("kind", "token"),
-      s"manifest $manifestDir version $v has columns " +
-        s"${df.columns.mkString("(", ", ", ")")}; expected (kind, token) " +
-        "— a store persisted by a pre-(kind, token) build must be rebuilt")
-    df.select("kind", "token").collect().toSeq
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getString(1)).sorted).toMap
   }
 }

@@ -273,9 +273,8 @@ object StreamingDedup extends Logging {
     val bloomBytes = spark.read
       .parquet(s"$indexPath/bloom/token=${live("bloom").head}")
       .head.getAs[Array[Byte]]("bloom")
-    val hashes = spark.read.parquet(s"$indexPath/hashes")
-      .filter(col("ingest").isInCollection(live.getOrElse("seg", Seq.empty)))
-      .select(col("h"))
+    val hashes = graft.operators.StoreVersioning
+      .segments(spark, indexPath, "hashes", live("seg")).select(col("h"))
     val toks = graft.functions.TextFunctions.tokens(col("text"))
     val frac = col("n_hit").cast("double") / col("n_grams")
     docs

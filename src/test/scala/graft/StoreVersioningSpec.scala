@@ -342,4 +342,107 @@ class StoreVersioningSpec extends AnyFunSuite with Matchers
     }
     e.getMessage should include("expected (kind, token)")
   }
+
+  // ---- one manifest writer, one reader, one live-segment scan ----
+
+  /** Spark jobs `body` starts on this thread. The listener bus delivers
+    * job starts in order, so once a sentinel job started after `body`
+    * arrives, every job of `body` has arrived before it. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.jobcount"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      Iterator.continually(
+          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(t => { require(t != null, "sentinel job never arrived"); t })
+        .takeWhile(_ != "sentinel").count(_ == "body")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("pinning or publishing a version starts no Spark job; a text-index " +
+    "append starts at most 6") {
+    val dir = freshDir()
+    val corpus = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    PersistedIndex.buildTextIndex(spark,
+      corpus.filter(col("doc_id") % 2 === 0), dir)
+    jobsOf(StoreVersioning.liveTokens(spark, s"$dir/manifest")) shouldBe 0
+    jobsOf(StoreVersioning.commitTokens(spark, s"$dir/manifest",
+      Seq(("seg", "base")))) shouldBe 0
+    // manifest I/O was 5 of the 11 jobs when the manifest was parquet
+    val append = jobsOf(PersistedIndex.appendToTextIndex(spark,
+      corpus.filter(col("doc_id") % 2 === 1), dir))
+    val search = jobsOf(PersistedIndex.searchTextIndex(spark, dir,
+      graft.operators.Retrieval.QueryTerms).collect())
+    info(s"appendToTextIndex: $append jobs; searchTextIndex: $search jobs")
+    append should be <= 6
+  }
+
+  test("the manifest is one kind<TAB>token file; a missing file or a " +
+    "malformed line fails loudly") {
+    val dir = freshDir()
+    val v = StoreVersioning.commitTokens(spark, dir,
+      Seq(("seg", "base"), ("edges", "3:f2")))
+    val file = new java.io.File(StoreVersioning.versionDir(dir, v))
+      .listFiles().filter(_.getName.endsWith(".tsv"))
+    file.map(f => new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)) shouldBe
+      Array("seg\tbase\nedges\t3:f2\n")
+    StoreVersioning.liveTokens(spark, dir)("edges") shouldBe Seq("3:f2")
+    // a torn or hand-edited manifest never reads as a smaller live set
+    val out = StoreVersioning.fs(spark, dir).create(
+      new org.apache.hadoop.fs.Path(file.head.toURI), true)
+    try out.write(
+      "seg\tbase\nseg\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    intercept[IllegalArgumentException] {
+      StoreVersioning.liveTokens(spark, dir)
+    }.getMessage should include("expected (kind, token)")
+    // an empty version directory has no manifest at all
+    StoreVersioning.commitNextVersion(spark, dir)(st =>
+      new java.io.File(st).mkdirs())
+    intercept[IllegalArgumentException] {
+      StoreVersioning.liveTokens(spark, dir)
+    }.getMessage should include("expected (kind, token)")
+    // the writer refuses what the line format cannot carry
+    Seq(("se\tg", "base"), ("seg", "ba\nse")).foreach { row =>
+      an[IllegalArgumentException] should be thrownBy
+        StoreVersioning.commitTokens(spark, dir, Seq(row))
+    }
+  }
+
+  test("no code outside StoreVersioning writes or reads a manifest or " +
+    "filters a live-segment list itself") {
+    val forbidden = Seq("""col("ingest").isInCollection""", """.toDF("kind"""",
+      "spark.read.parquet(StoreVersioning.versionDir")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    files.size should be > 50
+    val home = root.resolve("graft/operators/StoreVersioning.scala")
+    java.nio.file.Files.exists(home) shouldBe true
+    // code only: scaladoc/block-comment lines and trailing `//` comments
+    // are prose and may name the calls (the FenceSpec rule)
+    val offenders = for {
+      f <- files if f != home
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim.replaceAll("//.*", "")
+      if !code.startsWith("*") && !code.startsWith("/*")
+      p <- forbidden if code.contains(p)
+    } yield s"${root.relativize(f)}:${n + 1}: $p"
+    offenders shouldBe empty
+  }
 }

@@ -167,11 +167,10 @@ class TextVectorFunctionsSpec extends AnyFunSuite with Matchers with SparkTestBa
     out.foreach { case (n, h) => n shouldBe h }
   }
 
-  test("native MinHashOne and MinHashAll match the HOF on arrays with nulls, " +
-      "empties and non-ASCII text (property)") {
-    // the HOF's md5 of a null element is null and array_min skips it, so
-    // the native loops skip null elements; a null array stays null
-    graft.expressions.VectorExpressions.register(spark)
+  /** 200 seeded string arrays: null arrays, empty and all-null arrays,
+    * and arrays of 1–8 elements mixing nulls, empty strings, ASCII and
+    * non-ASCII text. */
+  private lazy val stringArrayCases: Seq[Tuple1[Option[Seq[Option[String]]]]] = {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val element: Gen[Option[String]] = Gen.frequency(
@@ -186,8 +185,62 @@ class TextVectorFunctionsSpec extends AnyFunSuite with Matchers with SparkTestBa
       2 -> Gen.const(Some(Seq.empty)),
       2 -> Gen.listOfN(3, Gen.const(None)).map(Some(_)),
       10 -> Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, element)).map(Some(_)))
-    val cases = (0 until 200).map(i =>
+    (0 until 200).map(i =>
       Tuple1(arrays.pureApply(Gen.Parameters.default, Seed(7L + i))))
+  }
+
+  test("native MinHashBandDigests and ShingleHashes match their interpreted " +
+      "chains on arrays with nulls, empties and non-ASCII text (property)") {
+    graft.expressions.VectorExpressions.register(spark)
+    val cases = stringArrayCases
+    val len = 3
+    val sz = org.apache.spark.sql.functions.size _
+    // the interpreted shingle chain needs size >= len (slice rejects the
+    // start index 0 a shorter array's sequence reaches)
+    val long = sz($"s") >= len
+    val hofShingles = when(long, transform(
+      sequence(lit(0), sz($"s") - len),
+      i => md5(concat_ws(" ", slice($"s", i + 1, lit(len))))))
+    // an empty or all-null set hashes the "null" literal per band, where
+    // the HOF's concat_ws drops the null mins (MinHashBandDigests doc)
+    val nullBand = md5(lit("null|null|null|null"))
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = df.select(
+        graft.expressions.VectorExpressions.minHashBandsNative($"s").as("n"),
+        lshBandDigests($"s").as("h"),
+        nullBand.as("nb"),
+        when(long, graft.expressions.VectorExpressions
+          .shingleHashesNative($"s", len)).as("sn"),
+        hofShingles.as("sh"))
+        .as[(Option[Seq[String]], Seq[String], String, Option[Seq[String]],
+          Option[Seq[String]])]
+        .collect()
+      out should have size cases.size.toLong
+      cases.map(_._1).zip(out).foreach { case (in, (n, h, nb, sn, sh)) =>
+        in match {
+          case None => n shouldBe None
+          case Some(xs) if xs.forall(_.isEmpty) => n shouldBe Some(Seq.fill(4)(nb))
+          case Some(_) => n shouldBe Some(h)
+        }
+        sn shouldBe sh
+      }
+      // the generated cases reach every branch
+      cases.count(_._1.exists(xs => xs.nonEmpty && xs.forall(_.isEmpty))) should
+        be > 0
+      cases.count(_._1.exists(xs => xs.exists(_.isEmpty) &&
+        xs.exists(_.nonEmpty) && xs.size >= len)) should be > 0
+    }
+    // a local relation evaluates interpreted; an RDD-backed one runs codegen
+    check(cases.toDF("s"))
+    check(spark.sparkContext.parallelize(cases, 2).toDF("s"))
+  }
+
+  test("native MinHashOne and MinHashAll match the HOF on arrays with nulls, " +
+      "empties and non-ASCII text (property)") {
+    // the HOF's md5 of a null element is null and array_min skips it, so
+    // the native loops skip null elements; a null array stays null
+    graft.expressions.VectorExpressions.register(spark)
+    val cases = stringArrayCases
     val seeds = Seq(0, 5, 99)
     def check(df: org.apache.spark.sql.DataFrame): Unit = {
       val out = df.select(

@@ -10,11 +10,36 @@ hash of all values (rows in result order AND row-sorted, so we catch both
 kinds of mismatch). Each PASS/FAIL line ends with the seconds DuckDB spent on
 that query's oracle (both executions, and any low-memory retries).
 """
-import sys, os, json, hashlib, time
+import sys, os, json, hashlib, time, atexit, shutil
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+# DuckDB spills operator state here. The cap makes a runaway oracle fail
+# its own line with DuckDB's spill error instead of filling the disk
+# (knn_triangles at sf0.1 once spilled 16 GB).
+SPILL_DIR = "/tmp/duck_spill"
+SPILL_CAP = "8GB"
+
+
+def connect(sf_dir, mem, threads=None):
+    """A DuckDB connection with every testdata table as a view. On a host
+    that caps per-process RSS (~10 GB), without a memory_limit and a
+    spill directory DuckDB dies with std::bad_alloc on heavy oracles
+    (knn_triangles' wedge enumeration at sf0.1) instead of spilling — cap
+    below the RSS ceiling and let blocks go to disk."""
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{mem}'")
+    con.execute(f"SET temp_directory='{SPILL_DIR}'")
+    con.execute(f"SET max_temp_directory_size='{SPILL_CAP}'")
+    if threads is not None:
+        con.execute(f"SET threads={threads}")
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
 
 
 def norm_cell(v):
@@ -48,17 +73,8 @@ def oracle_secs(t0):
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
-    con = duckdb.connect()
-    # the sandbox caps per-process RSS (~10 GB): without a memory_limit
-    # and a spill directory DuckDB dies with std::bad_alloc on heavy
-    # oracles (knn_triangles' wedge enumeration at sf0.1) instead of
-    # spilling — cap below the RSS ceiling and let blocks go to disk
-    con.execute("SET memory_limit='7GB'")
-    con.execute("SET temp_directory='/tmp/duck_spill'")
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    atexit.register(shutil.rmtree, SPILL_DIR, ignore_errors=True)
+    con = connect(sf_dir, "7GB")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(oracle):
@@ -127,15 +143,7 @@ def main():
                 # defeats the 8GB escalation), hence the finally-close
                 con2 = None
                 try:
-                    con2 = duckdb.connect()
-                    con2.execute(f"SET memory_limit='{mem}'")
-                    con2.execute("SET temp_directory='/tmp/duck_spill'")
-                    con2.execute(f"SET threads={threads}")
-                    for t in TABLES:
-                        p = f"{sf_dir}/{t}.parquet"
-                        if os.path.exists(p):
-                            con2.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                                         f"read_parquet('{p}')")
+                    con2 = connect(sf_dir, mem, threads)
                     o = con2.execute(oracle[name])
                     o_cols = [d[0] for d in o.description]
                     o_rows = o.fetchall()
